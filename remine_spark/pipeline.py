@@ -213,7 +213,6 @@ def run_pipeline(
     min_sup: int = mining.MIN_SUP, max_len: int = mining.MAX_LEN,
     outer_iters: int = 2, inner_iters: int = 4,
     transe_epochs: int = 20, transe_dim: int = 16,
-    transe_param_shard: bool | None = None,
     resume: bool = True,
     quality_pools: tuple[set, set] | None = None,
 ) -> dict[str, DataFrame]:
@@ -349,7 +348,6 @@ def run_pipeline(
     # 5. ReMine-Global (M12/M13) + ranked triples sink, subj-hash salted (S8)
     te = transe.fit(
         spark, tuples, dim=transe_dim, epochs=transe_epochs,
-        param_shard=transe_param_shard,
         checkpoint_path=(os.path.join(workdir, "transe_model.json")
                          if resume else None))
     kg_embeddings = checkpoint(

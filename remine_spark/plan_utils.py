@@ -1,8 +1,8 @@
 """Plan-level utilities for iterative DataFrame loops.
 
-Iterative algorithms (connected components, PageRank, TransE epochs) keep
-their driver loops tractable with eager ``localCheckpoint`` calls — plan
-truncation per round. Two non-obvious hazards come with that pattern, each
+Iterative algorithms (connected components, PageRank) keep their driver
+loops tractable with eager ``localCheckpoint`` calls — plan truncation per
+round. Two non-obvious hazards come with that pattern, each
 measured in this repo (BENCH.md, round 5):
 
 - ``DataFrame.unpersist()`` does NOT free a localCheckpoint's blocks (the

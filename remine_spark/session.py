@@ -1,9 +1,11 @@
 """SparkSession factory tuned for this engine.
 
-Defaults follow the local[32]/128GiB sandbox but every knob scales to a real
-cluster: AQE on (runtime re-planning, skew-join splitting), Arrow transport on
-(all custom operators are pandas UDFs), shuffle partitions sized to cores
-locally (on a cluster this should be ~2-3x total executor cores).
+Core count and driver heap default to the host (``os.cpu_count()``; 40% of
+physical RAM, capped at 24g), overridable with ``SPARK_GRAFT_CPUS`` and
+``SPARK_DRIVER_MEMORY``. Every knob scales to a real cluster: AQE on
+(runtime re-planning, skew-join splitting), Arrow transport on (all custom
+operators are pandas UDFs), shuffle partitions sized to cores locally (on a
+cluster this should be ~2-3x total executor cores).
 """
 
 from __future__ import annotations
@@ -12,7 +14,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def default_driver_memory() -> str:
+    """min(24g, 40% of MemTotal) in MiB: the heap plus Python workers and
+    off-heap buffers must fit the host, or the kernel kills the JVM."""
+    cap_mib = 24 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{cap_mib}m"
+    return f"{min(cap_mib, kib * 2 // 5 // 1024)}m"
 
 
 def get_spark(
@@ -64,7 +79,8 @@ def get_spark(
         # full-width parallelism (cluster-scale files are ≥128MB and split
         # by maxPartitionBytes regardless)
         .config("spark.sql.files.openCostInBytes", str(8 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY")
+                or default_driver_memory())
         # dump a python traceback if an Arrow worker dies/hangs mid-protocol
         # (diagnosability for long unattended runs; no steady-state cost)
         .config("spark.python.worker.faulthandler.enabled", "true")

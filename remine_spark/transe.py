@@ -6,24 +6,21 @@ and ranks tuples by ‖e_subj + mean(e_rel) − e_obj‖₁ (postprocessing.py:2
 Per the north star this engine trains those embeddings itself with the
 translating objective s + p ≈ o:
 
-- training edges: tuples exploded to (subj, rel, obj)
+- training edges: tuples exploded to distinct (subj, rel, obj)
 - margin ranking loss, L1 distance, head/tail corruption negatives
-- mini-batch SGD where each epoch is one deterministic sample of the edge
-  table; an Arrow mapInPandas kernel emits compacted per-batch gradient
-  partials which a JVM-side `groupBy(kind, idx)` elementwise pre-sum
-  (zip_with fold — the log-fan-in equivalent of treeAggregate) reduces to
-  ONE row per touched parameter before the driver applies the update and
-  re-broadcasts. The driver therefore receives O(touched params), never
-  O(batches × params) — the reduction happens in the shuffle.
+- one SGD step per epoch over a deterministic sample of the edge table
 
-Determinism: negatives and batch sampling are seeded from (edge id, epoch)
-hashes, so retries/stragglers can't change the result (UDF retry safety at
-cluster scale).
+Training runs on the driver: one Spark job collects the distinct edges and
+the epoch loop is numpy over int ids. The edge table is bounded by the
+phrase vocabulary (121k edges at 1M docs), and at 5M edges one driver loop
+still beat a Spark job per epoch, whose Python-UDF boundary and scheduling
+cost more than the math. Scoring stays distributed: score_and_rank
+broadcasts the trained model to a pandas UDF.
 
-Scale notes: parameter matrices are (n_entities + n_relations) × dim and are
-broadcast each epoch — at web scale shard the entity matrix by hash and
-train per-shard (parameter-server pattern); the mergeable-partials kernel
-and seeded sampling carry over unchanged.
+Determinism: negatives and sampling are seeded from (edge hash, epoch), and
+gradient components are sums of ±1 margin signs (integer-valued doubles)
+that add exactly in any order, so the result does not depend on edge order
+or input partitioning; a resumed run equals an uninterrupted one.
 """
 
 from __future__ import annotations
@@ -32,8 +29,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T, Window as W
-
-from remine_spark.plan_utils import free_local_checkpoint, stats_free_leaf
 
 
 def edges_from_tuples(tuples: DataFrame) -> DataFrame:
@@ -96,110 +91,57 @@ def load_model(path: str) -> tuple[TransEModel, int] | None:
     return m, int(blob["epoch"])
 
 
-def presum_grads(partials: DataFrame, dim: int | None = None) -> DataFrame:
-    """treeAggregate-equivalent reduction of mergeable gradient partials.
-
-    posexplode each grad array to (kind, idx, pos, v) and SUM — a plain
-    codegen'd hash aggregate whose map-side partial combine collapses the
-    per-task partials before the exchange, so shuffled volume is bounded
-    by touched-params × dim regardless of task count. (The earlier
-    zip_with-fold-over-collect_list formulation evaluated an interpreted
-    lambda per partial per element — cost grew linearly with cluster
-    size and made TransE *anti-scale* 8→32 cores.) The 16-element vector
-    reassembly (sort_array over structs) touches one tiny array per
-    parameter. Gradient components are sums of ±1 margin signs — integer-
-    valued doubles — so fp addition is exact and order-insensitive: the
-    reduction is bit-identical to a numpy merge in any order.
-
-    With ``dim`` given, the reduction runs as ONE groupBy carrying dim
-    codegen'd `sum(element_at(g, i))` buffers — a single shuffle instead
-    of the explode's two (the explode variant stays for dim-agnostic
-    callers); identical output by the same exactness argument."""
-    if dim is not None:
-        return (
-            partials.groupBy("kind", "idx")
-            .agg(*[F.sum(F.element_at("g", i + 1)).alias(f"_g{i}")
-                   for i in range(dim)])
-            .select("kind", "idx",
-                    F.array(*[F.col(f"_g{i}") for i in range(dim)]).alias("g"))
-        )
-    return (
-        partials.select("kind", "idx", F.posexplode("g").alias("pos", "v"))
-        .groupBy("kind", "idx", "pos")
-        .agg(F.sum("v").alias("v"))
-        .groupBy("kind", "idx")
-        .agg(F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "v"))),
-            lambda s: s["v"]).alias("g"))
-    )
+# Edges per vectorized step: bounds the (chunk × dim) gather temporaries.
+# Output does not depend on it (see _epoch_grads).
+_CHUNK = 16_384
 
 
-# Edge count beyond which fit() switches to the parameter-sharded path by
-# default: past this, the entity vocabulary is no longer safely
-# driver-collectable and the per-epoch (E,R) broadcast stops amortizing.
-SHARD_EDGE_THRESHOLD = 5_000_000
-
-# Edge count below which the epoch loop runs driver-local: one collect of
-# the (bounded) edge table replaces per-epoch broadcast+job+shuffle+collect
-# rounds, whose fixed session overhead dominated training wall at small
-# scale (~2 s/epoch of pure scheduling). Bit-identical to the distributed
-# path: the SAME batch kernel runs over pandas chunks, and gradient
-# components are integer-valued doubles (sums of ±1 margin signs), so the
-# partial reduction is exact in any order (see presum_grads). Bounded
-# collect: ≤ 200k rows × 4 narrow columns.
-LOCAL_EDGE_THRESHOLD = 200_000
+def _scatter_add(G: np.ndarray, idx: np.ndarray, g: np.ndarray) -> None:
+    """G[idx] += g with repeated rows, on the flat view (1-D ufunc.at is
+    ~2x faster than the row-wise form)."""
+    d = G.shape[1]
+    np.add.at(G.reshape(-1), (idx[:, None] * d + np.arange(d)).ravel(),
+              g.ravel())
 
 
-def _batch_grads(pdf: pd.DataFrame, E, R, e2i, r2i, n_ent: int,
-                 epoch: int, margin: float, sample_fraction: float
-                 ) -> pd.DataFrame | None:
-    """Gradient partials for ONE edge batch — the single source of the
-    TransE epoch math, shared by the distributed mapInPandas kernel and
-    the driver-local small-edge-table fast path (identical results by
-    construction). Returns a compacted (kind, idx, g) frame or None."""
-    hi = pdf["subj"].map(e2i).to_numpy(dtype=np.int64)
-    ri = pdf["rel"].map(r2i).to_numpy(dtype=np.int64)
-    ti = pdf["obj"].map(e2i).to_numpy(dtype=np.int64)
-    # splitmix-style epoch mix of the precomputed base hash
+def _epoch_grads(E: np.ndarray, R: np.ndarray, hi: np.ndarray,
+                 ri: np.ndarray, ti: np.ndarray, h: np.ndarray, epoch: int,
+                 margin: float, sample_fraction: float
+                 ) -> tuple[np.ndarray, np.ndarray]:
+    """Dense (dE, dR) for one epoch over all edges, against the epoch-start
+    parameters. Every component is a sum of ±1 margin signs — an
+    integer-valued double — so the chunked scatter-add is exact and
+    independent of chunk size and edge order."""
+    GE, GR = np.zeros_like(E), np.zeros_like(R)
+    n_ent = np.uint64(E.shape[0])
+    # splitmix-style epoch mix of the per-edge base hash
     # (constants folded in Python ints — intended mod-2^64 wrap)
-    key = pdf["h"].to_numpy(dtype=np.int64).view(np.uint64).copy()
-    key += np.uint64((epoch * 0x9E3779B97F4A7C15) % (1 << 64))
-    key ^= key >> np.uint64(31)
-    key *= np.uint64(0xBF58476D1CE4E5B9)
-    key ^= key >> np.uint64(27)
-    if sample_fraction < 1.0:
-        keep = ((key % np.uint64(10_000)).astype(np.float64)
-                / 10_000.0 < sample_fraction)
-        hi, ri, ti, key = hi[keep], ri[keep], ti[keep], key[keep]
-    if hi.size == 0:
-        return None
-    corrupt_head = ((key >> np.uint64(8)) & np.uint64(1)).astype(bool)
-    ni = ((key >> np.uint64(16)) % np.uint64(n_ent)).astype(np.int64)
-    hi2 = np.where(corrupt_head, ni, hi)
-    ti2 = np.where(corrupt_head, ti, ni)
-    rr = R[ri]
-    pos = E[hi] + rr - E[ti]
-    neg = E[hi2] + rr - E[ti2]
-    loss = margin + np.abs(pos).sum(axis=1) - np.abs(neg).sum(axis=1)
-    act = loss > 0
-    if not act.any():
-        return None
-    gp = np.sign(pos[act])      # d|x|/dx
-    gn = np.sign(neg[act])
-    # scatter-add into compacted per-batch gradient rows
-    eidx = np.concatenate([hi[act], ti[act], hi2[act], ti2[act]])
-    egrd = np.concatenate([gp, -gp, -gn, gn])
-    uniq, inv = np.unique(eidx, return_inverse=True)
-    accE = np.zeros((uniq.size, E.shape[1]))
-    np.add.at(accE, inv, egrd)
-    runiq, rinv = np.unique(ri[act], return_inverse=True)
-    accR = np.zeros((runiq.size, R.shape[1]))
-    np.add.at(accR, rinv, gp - gn)
-    return pd.DataFrame({
-        "kind": ["e"] * uniq.size + ["r"] * runiq.size,
-        "idx": np.concatenate([uniq, runiq]),
-        "g": [list(v) for v in accE] + [list(v) for v in accR],
-    })
+    mix = np.uint64((epoch * 0x9E3779B97F4A7C15) % (1 << 64))
+    for lo in range(0, h.size, _CHUNK):
+        key = h[lo:lo + _CHUNK] + mix
+        key ^= key >> np.uint64(31)
+        key *= np.uint64(0xBF58476D1CE4E5B9)
+        key ^= key >> np.uint64(27)
+        hc, rc, tc = hi[lo:lo + _CHUNK], ri[lo:lo + _CHUNK], ti[lo:lo + _CHUNK]
+        if sample_fraction < 1.0:
+            keep = ((key % np.uint64(10_000)).astype(np.float64)
+                    / 10_000.0 < sample_fraction)
+            hc, rc, tc, key = hc[keep], rc[keep], tc[keep], key[keep]
+        # seeded negatives: corrupt head or tail with a hashed entity
+        corrupt_head = ((key >> np.uint64(8)) & np.uint64(1)).astype(bool)
+        ni = ((key >> np.uint64(16)) % n_ent).astype(np.int64)
+        hn = np.where(corrupt_head, ni, hc)
+        tn = np.where(corrupt_head, tc, ni)
+        rr = R.take(rc, axis=0)
+        pos = E.take(hc, axis=0) + rr - E.take(tc, axis=0)
+        neg = E.take(hn, axis=0) + rr - E.take(tn, axis=0)
+        act = margin + np.abs(pos).sum(axis=1) - np.abs(neg).sum(axis=1) > 0
+        gp = np.sign(pos[act])      # d|x|/dx
+        gn = np.sign(neg[act])
+        _scatter_add(GE, np.concatenate([hc[act], tc[act], hn[act], tn[act]]),
+                     np.concatenate([gp, -gp, -gn, gn]))
+        _scatter_add(GR, rc[act], gp - gn)
+    return GE, GR
 
 
 def fit(
@@ -207,71 +149,21 @@ def fit(
     dim: int = 16, epochs: int = 20, lr: float = 0.05, margin: float = 1.0,
     sample_fraction: float = 1.0, seed: int = 42,
     checkpoint_path: str | None = None, checkpoint_every: int = 5,
-    param_shard: bool | None = None,
 ) -> TransEModel:
-    """Mini-batch TransE training. Each epoch is ONE Arrow job over the
-    cached edge table: a mapInPandas gradient kernel emits compacted
-    per-batch gradient rows (kind, idx, grad[dim]); a JVM-side
-    `groupBy(kind, idx)` elementwise array pre-sum (partial agg map-side,
-    exchange on the parameter key — the treeAggregate reduction shape)
-    collapses them to one row per touched parameter before collect. The
-    driver receives O(touched params) rows regardless of cluster size and
-    applies one update per parameter. Gradients ride the same Arrow
-    python-worker pool as every other stage (no separate RDD-API pickle
-    workers — those cold-start a second pool and dominated wall time at
-    high core counts). Remaining web-scale step (documented, not needed at
-    this entity count): hash-shard E across executors parameter-server
-    style; the mergeable partials and seeded sampling carry over."""
-    from pyspark import StorageLevel
-
-    edges = edges_from_tuples(tuples)
-    # id resolution + per-edge base hash JVM-side, materialized once
-    edf = edges.select(
+    """TransE training on the driver. One Spark job collects the distinct
+    edges with their seeded base hash; the epoch loop is numpy over int
+    ids: dense gradients per epoch, then one SGD step and re-normalization.
+    With ``checkpoint_path`` the model is saved every ``checkpoint_every``
+    epochs and a rerun resumes after the last saved epoch."""
+    pdf = edges_from_tuples(tuples).select(
         "subj", "rel", "obj",
         F.xxhash64("subj", "rel", "obj", F.lit(seed)).alias("h"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # Right-size the epoch task count to the edge volume: the distinct
-    # edge table is often far smaller than the corpus (bounded entity
-    # vocabulary), and running every epoch as <shuffle_partitions> tiny
-    # tasks makes training pure per-task overhead that grows with core
-    # count (measured: TransE anti-scaled 8→32 cores before this).
-    # ~20k edges per task keeps python kernels amortized; large edge
-    # tables keep full parallelism.
-    n_edges = edf.count()
-    base = edf
-    want = max(1, min(edf.rdd.getNumPartitions(), n_edges // 20_000))
-    if want < edf.rdd.getNumPartitions():
-        # coalesce is a NARROW dependency over the cached parent: every
-        # epoch reads the cached blocks through it. (Re-persisting a
-        # coalesced copy — the old formulation — recomputed the whole
-        # edges groupBy shuffle a second time just to cache it again.)
-        edf = edf.coalesce(want)
-    # parameter-sharded dispatch (web-scale path: the entity matrix never
-    # materializes on the driver and is never broadcast — see _fit_sharded)
-    if param_shard is None:
-        param_shard = n_edges > SHARD_EDGE_THRESHOLD
-    if param_shard:
-        try:
-            return _fit_sharded(
-                spark, edf, dim=dim, epochs=epochs, lr=lr, margin=margin,
-                sample_fraction=sample_fraction, seed=seed,
-                checkpoint_path=checkpoint_path,
-                checkpoint_every=checkpoint_every)
-        finally:
-            base.unpersist()
-    # one job for both vocabularies (entities + relations, tagged union)
-    vocab = (
-        edf.select(F.col("subj").alias("t"), F.lit("e").alias("k"))
-        .union(edf.select(F.col("obj"), F.lit("e")))
-        .union(edf.select(F.col("rel"), F.lit("r")))
-        .distinct().collect()
-    )
-    ents = sorted(r.t for r in vocab if r.k == "e")
-    rels = sorted(r.t for r in vocab if r.k == "r")
+    ).toPandas()
+    ents = sorted(set(pdf["subj"]).union(pdf["obj"]))
+    rels = sorted(set(pdf["rel"]))
     model = TransEModel({e: i for i, e in enumerate(ents)},
                         {r: i for i, r in enumerate(rels)}, dim=dim, seed=seed)
     if not ents or not rels:
-        base.unpersist()
         return model
 
     # mid-run resume (north_star: the embed stage resumes mid-run): pick up
@@ -285,434 +177,23 @@ def fit(
                 and ck[0].rel2id == model.rel2id and ck[0].dim == dim:
             model, start_epoch = ck[0], ck[1] + 1
 
-    sc = spark.sparkContext
-    n_ent = len(ents)
-    e2i, r2i = model.ent2id, model.rel2id
-    grad_schema = "kind string, idx long, g array<double>"
-
-    if n_edges <= LOCAL_EDGE_THRESHOLD:
-        # Driver-local epoch loop: one bounded collect replaces per-epoch
-        # broadcast + job + shuffle + collect rounds. Same kernel, same
-        # batch math; partial sums are exact integer-valued doubles, so
-        # the reduction order cannot change a bit (see presum_grads).
-        pdf_all = edf.select("subj", "rel", "obj", "h").toPandas()
-        base.unpersist()
-        for epoch in range(start_epoch, epochs):
-            acc: dict[tuple[str, int], np.ndarray] = {}
-            for lo in range(0, len(pdf_all), 10_000):
-                out = _batch_grads(
-                    pdf_all.iloc[lo:lo + 10_000], model.E, model.R,
-                    e2i, r2i, n_ent, epoch, margin, sample_fraction)
-                if out is None:
-                    continue
-                for kind, idx, g in zip(out["kind"], out["idx"], out["g"]):
-                    k = (kind, int(idx))
-                    prev = acc.get(k)
-                    acc[k] = np.asarray(g) if prev is None \
-                        else prev + np.asarray(g)
-            for (kind, idx), g in acc.items():
-                if kind == "e":
-                    model.E[idx] -= lr * g
-                else:
-                    model.R[idx] -= lr * g
-            model._normalize()
-            if checkpoint_path is not None and (
-                    (epoch + 1) % checkpoint_every == 0
-                    or epoch == epochs - 1):
-                save_model(model, checkpoint_path, epoch)
-        return model
-
+    ent_ix = pd.Index(ents)
+    hi = ent_ix.get_indexer(pdf["subj"]).astype(np.int64)
+    ti = ent_ix.get_indexer(pdf["obj"]).astype(np.int64)
+    ri = pd.Index(rels).get_indexer(pdf["rel"]).astype(np.int64)
+    h = pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
+    del pdf
     for epoch in range(start_epoch, epochs):
-        bc = sc.broadcast((model.E, model.R))
-
-        def grads(batches):
-            E, R = bc.value
-            for pdf in batches:
-                out = _batch_grads(pdf, E, R, e2i, r2i, n_ent,
-                                   epoch, margin, sample_fraction)
-                if out is not None:
-                    yield out
-
-        # JVM-side elementwise pre-sum: one shuffled row per touched
-        # parameter reaches the driver (never one per batch partial);
-        # dim-specialized → single shuffle per epoch
-        presummed = presum_grads(
-            edf.mapInPandas(grads, schema=grad_schema), dim=dim)
-        for row in presummed.collect():
-            g = np.asarray(row.g)
-            if row.kind == "e":
-                model.E[row.idx] -= lr * g
-            else:
-                model.R[row.idx] -= lr * g
-        bc.unpersist()
+        GE, GR = _epoch_grads(model.E, model.R, hi, ri, ti, h, epoch,
+                              margin, sample_fraction)
+        # an untouched row is x - lr*0.0 == x exactly
+        model.E -= lr * GE
+        model.R -= lr * GR
         model._normalize()
         if checkpoint_path is not None and (
                 (epoch + 1) % checkpoint_every == 0 or epoch == epochs - 1):
             save_model(model, checkpoint_path, epoch)
-    base.unpersist()
     return model
-
-
-# ---------------------------------------------------------------------------
-# Parameter-sharded training (web-scale path): the (E,R) matrices live in a
-# params(kind, idx, vec) DataFrame hash-sharded by (kind, idx); each epoch is
-# gather (join params into edges) → Arrow gradient kernel → presum → scatter
-# (join updates back). No vocab collect, no full-matrix broadcast — the only
-# driver materialization is the FINAL TransEModel collect for the bounded-
-# vocab downstream contract (web-scale callers skip it and feed the params
-# DataFrame to score_and_rank_params). Bit-identical to the broadcast path
-# (tests/test_transe_presum.py): ids come from the same sorted order, init
-# rows are reproduced per-row via PCG64.advance, gradients are integer-
-# valued ±1 sums (exact under any reduction order), and every vector update
-# / norm is the same left-to-right IEEE chain.
-# ---------------------------------------------------------------------------
-
-def _params_init(spark: SparkSession, ent_ids: DataFrame, rel_ids: DataFrame,
-                 n_ent: int, dim: int, seed: int) -> DataFrame:
-    """(kind, idx, vec) initial parameter table. Row i of E is draws
-    [i*dim, (i+1)*dim) of default_rng(seed).uniform — reproduced on the
-    executors with PCG64.advance (verified bit-identical to the driver's
-    full-matrix draw), then L2-normalized like TransEModel._normalize."""
-    bound = 6.0 / np.sqrt(dim)
-
-    def init(batches):
-        for pdf in batches:
-            vecs = []
-            for kind, idx in zip(pdf["kind"], pdf["idx"]):
-                g = np.random.Generator(np.random.PCG64(seed))
-                off = (int(idx) if kind == "e" else n_ent + int(idx)) * dim
-                g.bit_generator.advance(off)
-                v = g.uniform(-bound, bound, (1, dim))
-                if kind == "e":
-                    # the exact _normalize code path (axis-norm + maximum):
-                    # numpy's length-d reduction is pairwise-unrolled, not
-                    # left-to-right, so a scalar/JVM fold would differ by
-                    # an ulp — same-code-path is the bit-identity contract
-                    v = v / np.maximum(
-                        np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
-                vecs.append([float(x) for x in v[0]])
-            out = pdf[["kind", "idx"]].copy()
-            out["vec"] = pd.Series(vecs, dtype=object)
-            yield out
-
-    base = (ent_ids.select(F.lit("e").alias("kind"), F.col("idx"))
-            .unionByName(rel_ids.select(F.lit("r").alias("kind"), "idx")))
-    return base.mapInPandas(
-        init, schema="kind string, idx long, vec array<double>")
-
-
-def _ordinal_ids(df: DataFrame, key: str) -> DataFrame:
-    """(t, idx): dense 0-based ids in sorted-key order WITHOUT a driver
-    collect — the per-partition zipWithIndex pattern. Spark's binary
-    string ordering equals Python's sorted() on the ASCII phrase
-    vocabulary, so ids match the broadcast path's enumerate(sorted(...))."""
-    from remine_spark.operators.relational import _ordinal
-
-    return (_ordinal(df.select(F.col(key).alias("t")).distinct(), "t")
-            .select("t", (F.col("rn") - 1).alias("idx")))
-
-
-def _fit_sharded(
-    spark: SparkSession, edf: DataFrame,
-    dim: int, epochs: int, lr: float, margin: float,
-    sample_fraction: float, seed: int,
-    checkpoint_path: str | None, checkpoint_every: int,
-) -> TransEModel:
-    """Parameter-server-style TransE on DataFrames (see section banner)."""
-    from pyspark import StorageLevel
-
-    ent_ids = _ordinal_ids(
-        edf.select(F.col("subj").alias("t"))
-        .unionByName(edf.select(F.col("obj").alias("t"))), "t")
-    rel_ids = _ordinal_ids(edf.select(F.col("rel").alias("t")), "t")
-    ent_ids = ent_ids.persist(StorageLevel.MEMORY_AND_DISK)
-    rel_ids = rel_ids.persist(StorageLevel.MEMORY_AND_DISK)
-    n_ent, n_rel = ent_ids.count(), rel_ids.count()
-    if n_ent == 0 or n_rel == 0:
-        ent_ids.unpersist()
-        rel_ids.unpersist()
-        return TransEModel({}, {}, dim=dim, seed=seed)
-
-    # resolve endpoint ids ONCE (sort-merge joins on the phrase at scale;
-    # AQE broadcasts the id tables when small)
-    eid = (
-        edf
-        .join(ent_ids.select(F.col("t").alias("subj"),
-                             F.col("idx").alias("hi")), "subj")
-        .join(ent_ids.select(F.col("t").alias("obj"),
-                             F.col("idx").alias("ti")), "obj")
-        .join(rel_ids.select(F.col("t").alias("rel"),
-                             F.col("idx").alias("ri")), "rel")
-        .select("hi", "ri", "ti", "h")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    eid.count()
-
-    params = _params_init(spark, ent_ids, rel_ids, n_ent, dim, seed)
-
-    # distributed epoch checkpoint (resume without ever collecting params)
-    start_epoch = 0
-    ck_dir = f"{checkpoint_path}.sharded" if checkpoint_path else None
-    if ck_dir is not None:
-        meta = _read_shard_meta(ck_dir)
-        if (meta is not None and meta["dim"] == dim
-                and meta["n_ent"] == n_ent and meta["n_rel"] == n_rel):
-            params = spark.read.parquet(ck_dir)
-            start_epoch = meta["epoch"] + 1
-    # stats-free leaf: checkpoint-preserved sizeInBytes estimates compound
-    # through the per-epoch join below (doubling bit-width per epoch) —
-    # harmless at 3-5 epochs, pathological at large epoch counts
-    # (plan_utils docstring / BENCH.md round-5 investigation)
-    ck_params = params.localCheckpoint(eager=True)
-    params = stats_free_leaf(ck_params)
-
-    n_ent_u = np.uint64(n_ent)
-
-    for epoch in range(start_epoch, epochs):
-
-        def negs(batches, _epoch=epoch):
-            """Seeded negative sampling — the identical splitmix epoch
-            mix as the broadcast kernel, emitted as id rows so the
-            parameter gather can be a plain equi-join."""
-            for pdf in batches:
-                hi = pdf["hi"].to_numpy(dtype=np.int64)
-                ri = pdf["ri"].to_numpy(dtype=np.int64)
-                ti = pdf["ti"].to_numpy(dtype=np.int64)
-                h = pdf["h"].to_numpy(dtype=np.int64)
-                key = h.view(np.uint64).copy()
-                key += np.uint64((_epoch * 0x9E3779B97F4A7C15) % (1 << 64))
-                key ^= key >> np.uint64(31)
-                key *= np.uint64(0xBF58476D1CE4E5B9)
-                key ^= key >> np.uint64(27)
-                if sample_fraction < 1.0:
-                    keep = ((key % np.uint64(10_000)).astype(np.float64)
-                            / 10_000.0 < sample_fraction)
-                    hi, ri, ti, h, key = (hi[keep], ri[keep], ti[keep],
-                                          h[keep], key[keep])
-                if hi.size == 0:
-                    continue
-                corrupt_head = ((key >> np.uint64(8)) & np.uint64(1)).astype(bool)
-                ni = ((key >> np.uint64(16)) % n_ent_u).astype(np.int64)
-                yield pd.DataFrame({
-                    "hi": hi, "ri": ri, "ti": ti,
-                    "hi2": np.where(corrupt_head, ni, hi),
-                    "ti2": np.where(corrupt_head, ti, ni),
-                })
-
-        # The gather groups on (hi, ri, ti, hi2, ti2) — collision-FREE:
-        # (hi, ri, ti) uniquely identifies an edge because
-        # edges_from_tuples is distinct, and hi2/ti2 are deterministic
-        # functions of the edge; h stays a sampling seed only (a 64-bit
-        # hash collision between two edges would otherwise merge their
-        # gathered structs, silently dropping one edge's gradients).
-        # Parameter requests are DISTINCT per edge (array_distinct before
-        # the explode): hi2==hi or ti2==ti always, so the 5 role rows
-        # collapse to ≤4 shuffled rows per edge (~20-40% less gather
-        # volume); the kernel re-derives each role's vector by (kind, idx)
-        # lookup from the id columns carried on the group key.
-        need = eid.mapInPandas(
-            negs, schema="hi long, ri long, ti long, hi2 long, ti2 long")
-        edge_key = ["hi", "ri", "ti", "hi2", "ti2"]
-        req = need.select(
-            *edge_key,
-            F.explode(F.array_distinct(F.array(*[
-                F.struct(F.lit(kind).alias("kind"), F.col(src).alias("idx"))
-                for kind, src in (("e", "hi"), ("e", "ti"), ("e", "hi2"),
-                                  ("e", "ti2"), ("r", "ri"))
-            ]))).alias("q"),
-        ).select(*edge_key, "q.kind", "q.idx")
-        gathered = (
-            req.join(params, ["kind", "idx"])
-            .groupBy(*edge_key)
-            .agg(F.collect_list(F.struct("kind", "idx", "vec")).alias("parts"))
-        )
-
-        def grads(batches):
-            """Same gradient math as the broadcast kernel; inputs arrive
-            as gathered (kind, idx, vec) structs resolved per role via
-            the edge's id columns instead of broadcast matrix lookups."""
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                hi = pdf["hi"].to_numpy(dtype=np.int64)
-                ri = pdf["ri"].to_numpy(dtype=np.int64)
-                ti = pdf["ti"].to_numpy(dtype=np.int64)
-                hi2 = pdf["hi2"].to_numpy(dtype=np.int64)
-                ti2 = pdf["ti2"].to_numpy(dtype=np.int64)
-                mats = {r: np.empty((n, dim)) for r in
-                        ("hp", "tp", "hn", "tn", "rr")}
-                for i, parts in enumerate(pdf["parts"]):
-                    vec = {(p["kind"], p["idx"]): p["vec"] for p in parts}
-                    mats["hp"][i] = vec[("e", hi[i])]
-                    mats["tp"][i] = vec[("e", ti[i])]
-                    mats["hn"][i] = vec[("e", hi2[i])]
-                    mats["tn"][i] = vec[("e", ti2[i])]
-                    mats["rr"][i] = vec[("r", ri[i])]
-                pos = mats["hp"] + mats["rr"] - mats["tp"]
-                neg = mats["hn"] + mats["rr"] - mats["tn"]
-                loss = (margin + np.abs(pos).sum(axis=1)
-                        - np.abs(neg).sum(axis=1))
-                act = loss > 0
-                if not act.any():
-                    continue
-                gp = np.sign(pos[act])
-                gn = np.sign(neg[act])
-                eidx = np.concatenate([hi[act], ti[act], hi2[act], ti2[act]])
-                egrd = np.concatenate([gp, -gp, -gn, gn])
-                uniq, inv = np.unique(eidx, return_inverse=True)
-                accE = np.zeros((uniq.size, dim))
-                np.add.at(accE, inv, egrd)
-                runiq, rinv = np.unique(ri[act], return_inverse=True)
-                accR = np.zeros((runiq.size, dim))
-                np.add.at(accR, rinv, gp - gn)
-                yield pd.DataFrame({
-                    "kind": ["e"] * uniq.size + ["r"] * runiq.size,
-                    "idx": np.concatenate([uniq, runiq]),
-                    "g": [list(v) for v in accE] + [list(v) for v in accR],
-                })
-
-        presummed = presum_grads(
-            gathered.mapInPandas(
-                grads, schema="kind string, idx long, g array<double>"),
-            dim=dim)
-
-        def apply_upd(batches):
-            """Scatter: v -= lr*g, then re-normalize ALL entity rows —
-            numerically the exact driver loop (same numpy reduce paths;
-            note the driver renormalizes untouched rows too, which is not
-            a bit-level no-op, so the kernel must as well)."""
-            for pdf in batches:
-                V = np.stack(pdf["vec"].to_numpy())
-                has_g = pdf["g"].notna().to_numpy()
-                if has_g.any():
-                    G = np.stack(pdf["g"][has_g].to_numpy())
-                    V[has_g] = V[has_g] - lr * G
-                is_e = (pdf["kind"] == "e").to_numpy()
-                if is_e.any():
-                    norms = np.maximum(
-                        np.linalg.norm(V[is_e], axis=1, keepdims=True),
-                        1e-12)
-                    V[is_e] = V[is_e] / norms
-                out = pdf[["kind", "idx"]].copy()
-                out["vec"] = pd.Series([list(r) for r in V], dtype=object,
-                                       index=out.index)
-                yield out
-
-        joined = params.join(presummed, ["kind", "idx"], "left")
-        ck_new = joined.mapInPandas(
-            apply_upd, schema="kind string, idx long, vec array<double>"
-        ).localCheckpoint(eager=True)
-        # free the superseded epoch's blocks; stats-free leaf as above
-        free_local_checkpoint(ck_params)
-        ck_params = ck_new
-        params = stats_free_leaf(ck_params)
-        if ck_dir is not None and (
-                (epoch + 1) % checkpoint_every == 0 or epoch == epochs - 1):
-            params.write.mode("overwrite").parquet(ck_dir)
-            _write_shard_meta(ck_dir, epoch, dim, n_ent, n_rel)
-
-    # bounded-vocab downstream contract: collect ONCE at the end (the only
-    # driver materialization; web-scale callers use score_and_rank_params)
-    model = _collect_params(params, ent_ids, rel_ids, dim, seed)
-    eid.unpersist()
-    ent_ids.unpersist()
-    rel_ids.unpersist()
-    return model
-
-
-def _read_shard_meta(ck_dir: str) -> dict | None:
-    import json
-
-    from . import fsio
-
-    raw = fsio.read_text(ck_dir + ".meta.json")
-    return None if raw is None else json.loads(raw)
-
-
-def _write_shard_meta(ck_dir: str, epoch: int, dim: int,
-                      n_ent: int, n_rel: int) -> None:
-    import json
-
-    from . import fsio
-
-    fsio.write_text_atomic(ck_dir + ".meta.json", json.dumps(
-        {"epoch": epoch, "dim": dim, "n_ent": n_ent, "n_rel": n_rel}))
-
-
-def _collect_params(params: DataFrame, ent_ids: DataFrame,
-                    rel_ids: DataFrame, dim: int, seed: int) -> TransEModel:
-    e2i = {r.t: int(r.idx) for r in ent_ids.collect()}
-    r2i = {r.t: int(r.idx) for r in rel_ids.collect()}
-    model = TransEModel(e2i, r2i, dim=dim, seed=seed)
-    for row in params.collect():
-        (model.E if row.kind == "e" else model.R)[row.idx] = np.asarray(row.vec)
-    return model
-
-
-def score_and_rank_params(spark: SparkSession, tuples: DataFrame,
-                          params: DataFrame,
-                          ent_ids: DataFrame, rel_ids: DataFrame) -> DataFrame:
-    """M12 scoring assembled by JOINS against the sharded params table —
-    the web-scale counterpart of score_and_rank's model broadcast. The
-    relation mean preserves the rels-array order (posexplode + pos-sorted
-    rebuild), so scores match the broadcast path bit-for-bit."""
-    e_vec = (ent_ids.join(params.filter("kind = 'e'"), "idx")
-             .select(F.col("t"), F.col("vec")))
-    r_vec = (rel_ids.join(params.filter("kind = 'r'"), "idx")
-             .select(F.col("t"), F.col("vec")))
-    base = tuples.select("doc_id", "sent_id", "subj", "rels", "obj")
-    rx = (
-        base.select("doc_id", "sent_id", "subj", "rels", "obj",
-                    F.posexplode_outer("rels").alias("pos", "rel"))
-        .join(r_vec.select(F.col("t").alias("rel"),
-                           F.col("vec").alias("rv")), "rel", "left")
-        .groupBy("doc_id", "sent_id", "subj", "rels", "obj")
-        .agg(F.sort_array(F.collect_list(
-            F.struct("pos", "rv"))).alias("rvs"))
-        .select(
-            "doc_id", "sent_id", "subj", "rels", "obj",
-            F.filter(F.transform("rvs", lambda s: s["rv"]),
-                     lambda v: v.isNotNull()).alias("rvecs"))
-    )
-    # elementwise mean over the known rel vectors (np.mean axis=0 ≡
-    # left-to-right per-element sum / count at this fan-in)
-    k = F.size("rvecs")
-    mean_r = F.when(k > 0, F.aggregate(
-        "rvecs",
-        F.array_repeat(F.lit(0.0), F.size(F.element_at("rvecs", 1))),
-        lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
-        lambda acc: F.transform(acc, lambda x: x / k.cast("double"))))
-    @F.pandas_udf(T.DoubleType())
-    def l1_score(sv: pd.Series, rm: pd.Series, ov: pd.Series) -> pd.Series:
-        # numpy |s + r - o|.sum(): the same reduce code path as the
-        # broadcast kernel — numpy's short-vector sum is pairwise-
-        # unrolled, so a left-to-right JVM fold differs by an ulp.
-        # Unknown subj/obj or zero known rel vectors → NaN, matching
-        # score_and_rank exactly (it emits NaN, never NULL; both order
-        # last under asc_nulls_last so ranks agreed, but the materialized
-        # values must too).
-        out = []
-        for s, r, o in zip(sv, rm, ov):
-            if s is None or r is None or o is None:
-                out.append(float("nan"))
-            else:
-                out.append(float(np.abs(
-                    np.asarray(s) + np.asarray(r) - np.asarray(o)).sum()))
-        return pd.Series(out, dtype="float64")
-
-    scored = (
-        rx.withColumn("rm", mean_r)
-        .join(e_vec.select(F.col("t").alias("subj"),
-                           F.col("vec").alias("sv")), "subj", "left")
-        .join(e_vec.select(F.col("t").alias("obj"),
-                           F.col("vec").alias("ov")), "obj", "left")
-        .withColumn("score", l1_score("sv", "rm", "ov"))
-        .select("doc_id", "sent_id", "subj", "rels", "obj", "score")
-    )
-    w = W.partitionBy("doc_id").orderBy(F.asc_nulls_last("score"),
-                                        F.asc("sent_id"), F.asc("subj"))
-    return scored.withColumn("rank", F.row_number().over(w))
 
 
 def embeddings_df(spark: SparkSession, model: TransEModel) -> DataFrame:

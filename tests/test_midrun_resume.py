@@ -28,7 +28,8 @@ def test_transe_epoch_resume_identical(spark, tmp_path):
     resumed = transe.fit(spark, tuples, dim=8, epochs=6, checkpoint_path=ck,
                          checkpoint_every=3)
     assert resumed.ent2id == full.ent2id
-    assert np.allclose(resumed.E, full.E) and np.allclose(resumed.R, full.R)
+    assert np.array_equal(resumed.E, full.E)
+    assert np.array_equal(resumed.R, full.R)
 
 
 def test_em_outer_iteration_resume_identical(spark, tmp_path):
