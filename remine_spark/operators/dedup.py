@@ -179,13 +179,16 @@ def _jaccard_verify(sh, pairs):
              F.first(F.when(F.col("side") == "b", F.col("shingles")),
                      ignorenulls=True).alias("shb"))
     )
+    # filter on the exact ratio and round only the surfaced column, as the
+    # oracle SQL does: a ratio just under JACCARD_MIN must not round up
+    # into the result
     return (
         both
-        .withColumn("jaccard", F.expr(
-            "round(size(array_intersect(sha, shb)) * cast(1.0 as double)"
-            " / size(array_union(sha, shb)), 4)"))
-        .filter(F.col("jaccard") >= JACCARD_MIN)
-        .select("doc_a", "doc_b", "jaccard")
+        .withColumn("j", F.expr(
+            "size(array_intersect(sha, shb)) * cast(1.0 as double)"
+            " / size(array_union(sha, shb))"))
+        .filter(F.col("j") >= JACCARD_MIN)
+        .select("doc_a", "doc_b", F.round("j", 4).alias("jaccard"))
     )
 
 

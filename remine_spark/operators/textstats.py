@@ -539,7 +539,7 @@ def quality_gopher_filter(spark, sf_dir):
            count(*) AS n_docs,
            round(avg(n_chars), 4) AS avg_chars,
            count(DISTINCT lang) AS n_langs,
-           round(avg(len(list_filter(string_split(text, ' '),
+           round(avg(len(list_filter(string_split(coalesce(text, ''), ' '),
                                      x -> x <> ''))), 4) AS avg_tokens
     FROM documents GROUP BY source
 """)
@@ -555,7 +555,7 @@ def host_doc_stats(spark, sf_dir):
         F.count(F.lit(1)).alias("n_docs"),
         F.round(F.avg("n_chars"), 4).alias("avg_chars"),
         F.countDistinct("lang").alias("n_langs"),
-        F.round(F.avg(F.expr(
-            "size(filter(split(text, ' '), x -> x != ''))")), 4)
+        F.round(F.avg(F.expr("size(filter(split(coalesce(text, ''), ' '), "
+                             "x -> x != ''))")), 4)
         .alias("avg_tokens"),
     )

@@ -1,9 +1,8 @@
 """End-to-end pipeline with checkpointed, resumable stage boundaries.
 
 north_rule requirements implemented here:
-- every stage boundary is a parquet checkpoint (Iceberg-ready: swap
-  ``.parquet(path)`` for ``.format("iceberg").saveAsTable`` — the layout,
-  bucketing and lineage logic are format-agnostic);
+- every stage boundary is a parquet checkpoint (parquet-tested; the
+  ``TABLE_FORMAT`` seam for other table formats is untested);
 - resume: ``run_pipeline`` skips any stage whose checkpoint already exists
   (kill it after stage k, relaunch, it picks up at k+1 — tested);
 - per-partition lineage + metrics rows are appended to ``<workdir>/lineage``
@@ -102,11 +101,12 @@ def _lineage(spark: SparkSession, workdir: str, stage: str, path: str,
 
 def _read_wide(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """Re-read a stage checkpoint. Scan parallelism (and therefore the task
-    count of every python stage downstream) is governed by
-    spark.sql.files.maxPartitionBytes — the session factory sizes it so
-    local checkpoints split across all cores; a real cluster's inputs are
-    thousands of partitions regardless. No repartition here: a shuffle in
-    the re-read plan would be re-paid by every downstream pass.
+    count of every python stage downstream) comes from Spark's byte-based
+    split packing: a small checkpoint packs into about one task per core
+    (one wave of python tasks), a checkpoint of fewer files than cores
+    reads one task per file, and large files split at 128 MiB. No
+    repartition here: a shuffle in the re-read plan would be re-paid by
+    every downstream pass.
 
     ``schema`` makes empty checkpoints readable (a degenerate stage writes
     only _SUCCESS; schema inference would fail)."""
@@ -116,10 +116,9 @@ def _read_wide(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.load(path)
 
 
-# Stage-table format seam: parquet here; set SPARK_GRAFT_TABLE_FORMAT=iceberg
-# (with the iceberg-spark runtime jar + a catalog on the cluster) and every
-# checkpoint becomes an Iceberg table append/replace with the same layout,
-# bucketing and lineage logic — nothing else in the pipeline changes.
+# Stage-table format: parquet-tested; format seam untested.
+# SPARK_GRAFT_TABLE_FORMAT names the format every checkpoint is written and
+# re-read with; no format other than parquet has been run.
 TABLE_FORMAT = os.environ.get("SPARK_GRAFT_TABLE_FORMAT", "parquet")
 
 
@@ -298,8 +297,9 @@ def run_pipeline(
     # They deliberately re-scan the parquet checkpoint rather than a Spark
     # cache: parquet→Arrow is columnar→columnar (fast into pandas UDFs),
     # while a row-format cache pays row→Arrow conversion on every pass —
-    # measured slower. Scan width is file-per-partition via the session's
-    # openCostInBytes (checkpoint files = 2×cores by construction).
+    # measured slower. Scan width is Spark's byte-based packing: these
+    # small checkpoints re-read as about one task per core, so every pass
+    # is one wave of python tasks.
     m = load_model(workdir) if resume else None
     if m is None:
         # mid-fit resume (north_star: the segment/fit stage resumes

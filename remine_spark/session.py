@@ -6,6 +6,14 @@ physical RAM, capped at 24g), overridable with ``SPARK_GRAFT_CPUS`` and
 (runtime re-planning, skew-join splitting), Arrow transport on (all custom
 operators are pandas UDFs), shuffle partitions sized to cores locally (on a
 cluster this should be ~2-3x total executor cores).
+
+File scans keep Spark's own split sizing: ``min(128 MiB, max(4 MiB, total
+bytes / default parallelism))``, each file costed at its size plus 4 MiB.
+A small checkpoint (a few MB in 2x-cores files) therefore packs into about
+one scan task per core, so each Python stage that re-reads it runs as one
+wave of tasks and pays the per-task Python worker cost once per core, not
+once per file; an input with fewer files than cores keeps one task per
+file; cluster-scale files split at 128 MiB.
 """
 
 from __future__ import annotations
@@ -67,18 +75,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # local-scale file splitting: checkpointed stages are small (MBs),
-        # and default 128MB packing would cap python-stage parallelism at a
-        # handful of tasks; 8MB keeps every core busy. On a real cluster
-        # (TBs per stage) raise via SPARK_GRAFT_MAX_PARTITION_BYTES.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(8 * 1024 * 1024)))
-        # openCost == maxPartitionBytes → small checkpoint files are NOT
-        # packed together: scan partitions ≈ file count, and stage writers
-        # emit 2×cores files, so python stages re-reading a checkpoint get
-        # full-width parallelism (cluster-scale files are ≥128MB and split
-        # by maxPartitionBytes regardless)
-        .config("spark.sql.files.openCostInBytes", str(8 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY")
                 or default_driver_memory())
         # dump a python traceback if an Arrow worker dies/hangs mid-protocol

@@ -9,12 +9,18 @@
   needs several propagation rounds.
 - rep_ngram_dup_frac: the in-row sorted-neighbour duplicate count must equal
   the obvious Counter-based per-doc computation.
+- host_doc_stats: a NULL-text document counts as zero tokens on both Spark
+  and the DuckDB oracle.
 """
 
 import collections
 
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from remine_spark import catalog
 from remine_spark.operators import dedup, graph, textstats
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -153,3 +159,26 @@ def test_quality_gopher_filter_matches_python(spark):
                 seen_fail[k] = True
     # thresholds must actually split the fixture corpus on these rules
     assert all(seen_fail.values()), seen_fail
+
+
+def test_host_doc_stats_null_text_matches_oracle(spark, tmp_path):
+    # one NULL-text document: Spark's size(split(NULL)) is -1 and DuckDB's
+    # len is NULL, so both engines must coalesce it to zero tokens
+    docs = pa.table({
+        "doc_id": pa.array([1, 2, 3, 4], pa.int64()),
+        "text": ["one two three", None, "four  five", "x y"],
+        "lang": ["en", "en", "de", "en"],
+        "source": ["a", "a", "a", "b"],
+        "n_chars": pa.array([13, 0, 10, 3], pa.int64()),
+    })
+    pq.write_table(docs, str(tmp_path / "documents.parquet"))
+    got = {r["source"]: r["avg_tokens"] for r in
+           textstats.host_doc_stats(spark, str(tmp_path)).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"'{tmp_path / 'documents.parquet'}'")
+    cur = con.execute(catalog.QUERIES["host_doc_stats"]["sql"])
+    cols = [c[0] for c in cur.description]
+    oracle = {r[cols.index("source")]: r[cols.index("avg_tokens")]
+              for r in cur.fetchall()}
+    assert got == oracle == {"a": round(5 / 3, 4), "b": 2.0}

@@ -88,15 +88,31 @@ def test_entry_contract_smoke(spark):
     assert len(df.schema.fields) > 0
 
 
-def test_checkpoint_scan_splitting_configured(run, spark):
-    """Small-file packing must not collapse checkpoint re-reads to 1-2 scan
-    partitions (that caps every downstream python stage regardless of
-    cores): the session pins maxPartitionBytes low locally, and the re-read
-    splits across multiple tasks even for this tiny corpus."""
-    _wd, out, _docs = run
-    assert int(spark.conf.get("spark.sql.files.maxPartitionBytes")
-               .rstrip("b")) <= 8 * 1024 * 1024
-    assert out["sentences"].rdd.getNumPartitions() > 1
+def test_checkpoint_reread_packs_to_core_count(spark, tmp_path):
+    """A checkpoint re-read is one wave of tasks: a small frame written as
+    2×cores files packs into exactly one scan partition per core (every
+    python stage downstream pays its per-task cost once per core), while a
+    frame of fewer files than cores keeps one partition per file, so the
+    re-read never drops below its file count up to the core count."""
+    cores = spark.sparkContext.defaultParallelism
+    wd = str(tmp_path)
+
+    def files(stage):
+        return [f for f in os.listdir(os.path.join(wd, stage))
+                if f.endswith(".parquet")]
+
+    wide = pipeline.checkpoint(
+        spark, wd, "wide",
+        spark.range(0, 4000, numPartitions=2 * cores), resume=False)
+    assert len(files("wide")) == 2 * cores
+    assert wide.rdd.getNumPartitions() == cores
+    assert wide.count() == 4000
+
+    narrow = pipeline.checkpoint(
+        spark, wd, "narrow", spark.range(0, 300, numPartitions=3),
+        resume=False)
+    assert len(files("narrow")) == 3
+    assert narrow.rdd.getNumPartitions() == 3
 
 
 def test_edges_linked_to_entities(run, spark):
