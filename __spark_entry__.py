@@ -13,6 +13,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -49,16 +50,27 @@ def _pages_from_documents(spark: SparkSession, sf_dir: str,
     )
 
 
-# bump when stage schemas / pipeline outputs change: keeps resume=True from
-# reusing checkpoints written by an older code version in a shared /tmp
-_ENTRY_VERSION = "v5"  # v5: fused extraction checkpoint replaces mentions/tuples
+def _tmp_dir(kind: str, sf_dir: str) -> str:
+    """A fixed directory per entry kind and scale factor under the temp
+    dir, named with the checkpoint layout so a workdir of an older layout
+    is never resumed."""
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"remine_{kind}_layout{_pipeline.CHECKPOINT_LAYOUT}_"
+        + os.path.basename(os.path.normpath(sf_dir)))
 
 
 def _flagship_workdir(sf_dir: str) -> str:
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"remine_entry_{_ENTRY_VERSION}_"
-        + os.path.basename(os.path.normpath(sf_dir)))
+    return _tmp_dir("entry", sf_dir)
+
+
+def _fresh_tmp_dir(kind: str, sf_dir: str) -> str:
+    """``_tmp_dir`` emptied first: a streaming entry starts from no
+    checkpoint, and repeated calls reuse one directory (the frame an
+    entry returns reads from it, so collect it before the next call)."""
+    root = _tmp_dir(kind, sf_dir)
+    shutil.rmtree(root, ignore_errors=True)
+    return root
 
 
 def _run_flagship(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -126,7 +138,7 @@ def _streaming_kg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     from remine_spark.streaming import kg_update
 
     _run_flagship(spark, sf_dir)  # trains + saves the model (resume=True)
-    root = tempfile.mkdtemp(prefix="remine_stream_entry_")
+    root = _fresh_tmp_dir("stream_entry", sf_dir)
     in_dir = os.path.join(root, "in")
     out_dir = os.path.join(root, "out")
     ck_dir = os.path.join(root, "ckpt")
@@ -150,7 +162,7 @@ def _streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT DISTINCT md5(text) over the same slice."""
     from remine_spark.streaming import dedup_stream
 
-    root = tempfile.mkdtemp(prefix="remine_sdedup_")
+    root = _fresh_tmp_dir("sdedup", sf_dir)
     in_dir = os.path.join(root, "in")
     out_dir = os.path.join(root, "out")
     ck_dir = os.path.join(root, "ckpt")

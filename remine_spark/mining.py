@@ -196,81 +196,33 @@ def boost_patterns(sentences: DataFrame, max_len: int = MAX_LEN) -> DataFrame:
     boost_freq) — the observed chunk frequency, later floored to MIN_SUP
     on union.
 
-    When the sentences table carries the stage-1 ``chunk_a``/``chunk_b``
-    span columns (corpus.sentences_from_pages computes them inside the
-    SAME python NLP pass that tags the corpus), this is a pure JVM
-    explode + slice + agg — no second python corpus scan. The
-    mapInPandas fallback below covers ad-hoc sentences tables built
-    without those columns.
+    Reads the stage-1 ``chunk_a``/``chunk_b`` span columns, which
+    corpus.sentences_from_pages computes inside the SAME python NLP pass
+    that tags the corpus; a sentences table must carry them. So this is a
+    pure JVM explode + slice + agg — no second python corpus scan.
 
     Surface filter mirrors preprocessing.py:64 ('www'/'.com' excluded);
     span length capped at the loadExternalPatterns LENGTH_THRESHOLD
     (frequent_pattern_mining.h:244,251)."""
-    if "chunk_a" in sentences.columns:
-        spans = (
-            sentences.filter(F.col("chunk_a").isNotNull())
-            .select(
-                "tokens", "pos",
+    spans = (
+        sentences
+        .select("tokens", "pos",
                 F.explode(F.arrays_zip("chunk_a", "chunk_b")).alias("s"))
-            .select("tokens", "pos", F.col("s.chunk_a").alias("a"),
-                    F.col("s.chunk_b").alias("b"))
-            .filter(F.col("b") - F.col("a") <= max_len)
-            .select(
-                F.expr("slice(tokens, a + 1, b - a)").alias("ngram"),
-                F.concat_ws(" ", F.expr("slice(pos, a + 1, b - a)"))
-                .alias("pos_key"))
-            .withColumn("surf", F.concat_ws(" ", "ngram"))
-            .filter(~F.col("surf").contains("www")
-                    & ~F.col("surf").contains(".com"))
-            .drop("surf")
-        )
-        # Rows with NULL chunk columns (a resumed pre-chunk-upgrade
-        # sentences checkpoint is re-read with the new schema, so the
-        # columns exist but are null) would otherwise contribute ZERO
-        # spans — M14 boost patterns silently vanishing. Route exactly
-        # those rows through the python span generator; the null filter
-        # pushes to the scan, so on a current-schema corpus this leg
-        # receives no rows.
-        null_rows = sentences.filter(F.col("chunk_a").isNull())
-        spans = spans.unionByName(_py_chunk_spans(null_rows, max_len))
-        return spans.groupBy("ngram").agg(
-            F.count(F.lit(1)).alias("boost_freq"),
-            F.min("pos_key").alias("pos_key"))
-
-    return _py_chunk_spans(sentences, max_len).groupBy("ngram").agg(
+        .select("tokens", "pos", F.col("s.chunk_a").alias("a"),
+                F.col("s.chunk_b").alias("b"))
+        .filter(F.col("b") - F.col("a") <= max_len)
+        .select(
+            F.expr("slice(tokens, a + 1, b - a)").alias("ngram"),
+            F.concat_ws(" ", F.expr("slice(pos, a + 1, b - a)"))
+            .alias("pos_key"))
+        .withColumn("surf", F.concat_ws(" ", "ngram"))
+        .filter(~F.col("surf").contains("www")
+                & ~F.col("surf").contains(".com"))
+        .drop("surf")
+    )
+    return spans.groupBy("ngram").agg(
         F.count(F.lit(1)).alias("boost_freq"),
         F.min("pos_key").alias("pos_key"))
-
-
-def _py_chunk_spans(sentences: DataFrame, max_len: int) -> DataFrame:
-    """mapInPandas chunk-span generator: (ngram, pos_key) rows for
-    sentences tables without (or with null) stage-1 chunk columns."""
-    import pandas as pd
-
-    from .nlp import boost_chunk_spans
-
-    def gen(batches):
-        for pdf in batches:
-            ngrams, keys = [], []
-            for toks, tags in zip(pdf["tokens"], pdf["pos"]):
-                toks, tags = list(toks), list(tags)
-                for (a, b) in boost_chunk_spans(tags):
-                    if b - a > max_len:
-                        continue
-                    surf = " ".join(toks[a:b])
-                    if "www" in surf or ".com" in surf:
-                        continue
-                    ngrams.append(toks[a:b])
-                    keys.append(" ".join(tags[a:b]))
-            # explicit object dtype: an empty batch otherwise yields
-            # float64 columns that Arrow cannot cast to list<string>
-            yield pd.DataFrame({
-                "ngram": pd.Series(ngrams, dtype="object"),
-                "pos_key": pd.Series(keys, dtype="object"),
-            })
-
-    return sentences.select("tokens", "pos").mapInPandas(
-        gen, schema="ngram array<string>, pos_key string")
 
 
 def mine_patterns_boosted(
@@ -324,15 +276,6 @@ def mine_patterns_boosted(
     )
     return (mined.withColumn("is_boost", F.lit(False))
             .unionByName(extra.withColumn("is_boost", F.lit(True))))
-
-
-def unigram_counts(sentences: DataFrame) -> DataFrame:
-    """A1 (frequent_pattern_mining.h:303-319): token → corpus count."""
-    return (
-        sentences.select(F.explode("tokens").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
 
 
 def idf(sentences: DataFrame) -> DataFrame:

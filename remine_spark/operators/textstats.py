@@ -487,6 +487,10 @@ QF_MAX_DUP_3GRAM_FRAC = 0.01
                 AND dup_tok <= {QF_MAX_DUP_TOK_FRAC}
                 AND dup3 <= {QF_MAX_DUP_3GRAM_FRAC} AS INTEGER) AS passes
     FROM m
+    UNION ALL
+    SELECT doc_id, 0 AS ok_len, 0 AS ok_tok_len, 0 AS ok_stop, 0 AS ok_rep,
+           0 AS passes
+    FROM t WHERE coalesce(len(toks), 0) < 3
 """)
 def quality_gopher_filter(spark, sf_dir):
     """Composite Gopher-style quality gate: per document, pass/fail flags
@@ -494,19 +498,23 @@ def quality_gopher_filter(spark, sf_dir):
     repetition ceilings (duplicate-token and duplicate-3-gram fractions),
     plus the conjunction. This is THE standard pretraining corpus filter
     shape — each flag is kept separately so downstream mixing can relax
-    individual rules without recomputing.
+    individual rules without recomputing. A doc of fewer than 3 tokens has
+    no 3-gram to measure: it is emitted with every flag and ``passes`` 0
+    (rejected, not unexamined).
 
     Plan: every rule is a scan-side expression over the in-row token
     array (repetition via the shared sorted-neighbour fragments — see
-    rep_ngram_dup_frac); ZERO shuffles at any corpus size. Thresholds are
+    rep_ngram_dup_frac), and the short docs are a second scan-side
+    filter UNIONed in; ZERO shuffles at any corpus size. Thresholds are
     exact-comparison-safe across engines: all metrics are ratios of
     integers, compared identically as doubles in Spark and DuckDB."""
     d = table(spark, sf_dir, "documents")
     stop_list = ", ".join(f"'{s}'" for s in QF_STOPWORDS)
+    toks = d.select(
+        "doc_id", "text",
+        F.expr("filter(split(text, ' '), x -> x != '')").alias("toks"))
     m = (
-        d.select("doc_id", "text",
-                 F.expr("filter(split(text, ' '), x -> x != '')").alias("toks"))
-        .filter(F.expr("size(toks) >= 3"))
+        toks.filter(F.expr("size(toks) >= 3"))
         .withColumn("sg", F.expr(_SG_SPARK))
         .select(
             "doc_id",
@@ -524,7 +532,7 @@ def quality_gopher_filter(spark, sf_dir):
     ok_stop = F.col("stop_ratio") >= QF_MIN_STOP_RATIO
     ok_rep = (F.col("dup_tok") <= QF_MAX_DUP_TOK_FRAC) & \
         (F.col("dup3") <= QF_MAX_DUP_3GRAM_FRAC)
-    return m.select(
+    flags = m.select(
         "doc_id",
         ok_len.cast("int").alias("ok_len"),
         ok_tok_len.cast("int").alias("ok_tok_len"),
@@ -532,6 +540,10 @@ def quality_gopher_filter(spark, sf_dir):
         ok_rep.cast("int").alias("ok_rep"),
         (ok_len & ok_tok_len & ok_stop & ok_rep).cast("int").alias("passes"),
     )
+    short = toks.filter(F.expr("coalesce(size(toks), 0) < 3")).select(
+        "doc_id", *[F.lit(0).alias(c) for c in
+                    ("ok_len", "ok_tok_len", "ok_stop", "ok_rep", "passes")])
+    return flags.unionByName(short)
 
 
 @query("host_doc_stats", """

@@ -36,6 +36,14 @@ from .corpus import sentences_from_pages
 # REMINE_TRIPLE_BUCKETS.
 TRIPLE_BUCKETS = int(os.environ.get("REMINE_TRIPLE_BUCKETS", "0"))
 
+# Stage-checkpoint schema version, recorded in every workdir's
+# input_fingerprint.json. Bump it when any stage's output schema or
+# semantics change: resume=True then refuses the older workdir instead of
+# re-reading its checkpoints with NULL-filled columns. (6: chunk columns
+# on sentences, is_boost on patterns, entity_id on entities, one fused
+# kind-partitioned extraction checkpoint.)
+CHECKPOINT_LAYOUT = 6
+
 
 def _n_buckets(spark: SparkSession) -> int:
     if TRIPLE_BUCKETS > 0:
@@ -167,8 +175,11 @@ def load_model(workdir: str, name: str = "segmodel.json"
 
 def _guard_resume_input(pages: DataFrame, workdir: str, resume: bool) -> None:
     """Refuse to resume a workdir whose checkpoints came from DIFFERENT
-    input: stale-workdir resume silently yields triples for a corpus the
-    caller never passed (observed in practice with a shared /tmp workdir).
+    input or an older ``CHECKPOINT_LAYOUT``: stale-workdir resume silently
+    yields triples for a corpus the caller never passed (observed in
+    practice with a shared /tmp workdir), and a checkpoint of an older
+    layout re-reads with NULL-filled columns. ``resume=False`` recomputes
+    and re-stamps the marker.
     For file-backed inputs the fingerprint is driver-side only — the
     sorted input file list plus the schema — no data scan, so it costs
     nothing at 100 TB. In-memory inputs (inputFiles() == []) have no file
@@ -196,6 +207,12 @@ def _guard_resume_input(pages: DataFrame, workdir: str, resume: bool) -> None:
     prior = fsio.read_text(marker)
     if prior is not None and resume:
         blob = json.loads(prior)
+        if blob.get("layout") != CHECKPOINT_LAYOUT:
+            raise ValueError(
+                f"workdir {workdir!r} holds checkpoints of layout "
+                f"{blob.get('layout')!r}, this code writes layout "
+                f"{CHECKPOINT_LAYOUT}. Use a fresh --workdir or pass "
+                "resume=False/--no-resume to recompute.")
         if blob.get("fingerprint") != fp:
             raise ValueError(
                 f"workdir {workdir!r} holds checkpoints for different input "
@@ -204,7 +221,8 @@ def _guard_resume_input(pages: DataFrame, workdir: str, resume: bool) -> None:
                 "Use a fresh --workdir or pass resume=False/--no-resume to "
                 "recompute.")
     fsio.write_text_atomic(marker, json.dumps(
-        {"fingerprint": fp, "n_files": len(files)}))
+        {"fingerprint": fp, "n_files": len(files),
+         "layout": CHECKPOINT_LAYOUT}))
 
 
 def run_pipeline(
@@ -254,12 +272,6 @@ def run_pipeline(
             + [T.StructField("indicator", T.StringType()),
                T.StructField("quality", T.DoubleType())])
         patterns_df = _read_wide(spark, pat_path, schema=pat_schema)
-        # a pre-is_boost checkpoint re-read with the current schema yields
-        # the column present but NULL (parquet fills missing columns with
-        # null); external-pattern semantics default to "not a boost row"
-        # (mirrors the entity_id coalesce below)
-        patterns_df = patterns_df.withColumn(
-            "is_boost", F.coalesce(F.col("is_boost"), F.lit(False)))
     else:
         stage_caches: list[DataFrame] = []
         raw_patterns = mining.mine_patterns_boosted(
@@ -340,9 +352,7 @@ def run_pipeline(
         partition_cols=["kind"])
     mentions = extraction.filter(F.col("kind") == "m").select(
         "url", "doc_id", "sent_id", "start", "end", "text")
-    tuples = extraction.filter(F.col("kind") == "t").select(
-        "url", "doc_id", "sent_id", "subj", "pred", "obj", "rels",
-        "subj_start", "subj_end", "obj_start", "obj_end")
+    tuples = tuples_mod.tuple_rows(extraction)
     _mark("mentions_tuples")
 
     # 5. ReMine-Global (M12/M13) + ranked triples sink, subj-hash salted (S8)
@@ -384,13 +394,6 @@ def run_pipeline(
     # surfaces resolve to canonical entity ids via broadcast joins (the
     # entity map is the small side; at extreme entity cardinality switch to
     # a bucketed sort-merge join on `entity`), salted on subj_id
-    # A pre-entity_id checkpoint re-read with the current schema yields the
-    # column present but NULL in every row (checkpoint() reads with
-    # schema=df.schema, so a column-presence check can never fire); the id
-    # is a pure function of the canonical form, so deriving it on read is
-    # identical either way.
-    entities = entities.withColumn(
-        "entity_id", F.coalesce(F.col("entity_id"), F.xxhash64("entity")))
     ent_ids = entities.select("entity", "entity_id")
     subj_ids = ent_ids.select(F.col("entity").alias("subj"),
                               F.col("entity_id").alias("subj_id"))

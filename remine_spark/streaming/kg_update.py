@@ -4,8 +4,10 @@
 This is the Structured-Streaming seam SURVEY §2.9 identifies: the batch
 pipeline trains the segmentation model (EM needs global corpus statistics,
 so it stays batch); the stream then applies the FROZEN model to newly
-arriving pages via ``foreachBatch`` re-running the same corpus→mentions→
-tuples stages on each micro-batch and appending to the triples table.
+arriving pages via ``foreachBatch``, running the batch pipeline's own
+corpus stage and extraction kernel (``tuples.extraction_df``, tuple rows
+kept) on each micro-batch and appending to the triples table — so a
+streamed page yields exactly the tuples a batch run over it would.
 
 Exactly-once: the file source tracks processed files in the streaming
 checkpoint; the sink is partitioned by epoch_id and each micro-batch
@@ -24,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from remine_spark import model as model_mod, pipeline, transe, tuples as tuples_mod
+from remine_spark import pipeline, transe, tuples as tuples_mod
 from remine_spark.corpus import sentences_from_pages
 from remine_spark.streaming.ingest import stream_pages
 
@@ -57,7 +59,8 @@ def run_incremental_kg(
 
     def process_batch(pages_batch: DataFrame, epoch_id: int) -> None:
         sentences = sentences_from_pages(pages_batch, lang=lang)
-        tuples = tuples_mod.tuples_df(sentences, bc)
+        tuples = tuples_mod.tuple_rows(
+            tuples_mod.extraction_df(sentences, bc))
         if transe_model is not None:
             ranked = transe.score_and_rank(spark, tuples, transe_model)
         else:

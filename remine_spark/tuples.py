@@ -1,10 +1,12 @@
 """Mention derivation + shortest-dep-path tuple extraction (SURVEY §2
 P5/W5/J5/J6, M10/M11).
 
-One Arrow pass per sentence batch replaces the reference's
-remine-ie.sh stages 3-6 (segment → extract → transformat → remine --mode 1):
-segment (M7/M8) → mentions (postprocessing.py:103-199) → genSepath
-(genSepath.h:54-211) → TUPLE_MODE Viterbi keeping RP spans
+One extraction kernel, ``extraction_df``, serves both the batch pipeline
+and the stream (streaming/kg_update.py keeps its tuple rows), so the two
+KG paths cannot drift apart. One Arrow pass per sentence batch replaces
+the reference's remine-ie.sh stages 3-6 (segment → extract → transformat
+→ remine --mode 1): segment (M7/M8) → mentions (postprocessing.py:103-199)
+→ genSepath (genSepath.h:54-211) → TUPLE_MODE Viterbi keeping RP spans
 (remine.cpp:45-48, Segmentation ctor segmentation.h:491-497) → tuple rows.
 
 Final-triple formatting mirrors postprocessing.py:
@@ -27,32 +29,17 @@ from pyspark.sql import DataFrame, functions as F
 from . import algo
 from .nlp import PUNC
 
-MENTIONS_SCHEMA = (
-    "url string, doc_id long, sent_id int, start int, end int, text string"
-)
-
-TUPLES_SCHEMA = (
-    "url string, doc_id long, sent_id int, "
-    "subj string, pred string, obj string, rels array<string>, "
-    "subj_start int, subj_end int, obj_start int, obj_end int"
-)
-
-
-def extract_mentions_py(toks, pos, deps, m) -> list[tuple[int, int, str]]:
-    """Single-sentence mention derivation given a model payload ``m``."""
+def extract_tuples_py(toks, pos, heads, types, m) -> tuple[list, list]:
+    """Single-sentence end-to-end extraction given a model payload ``m``.
+    Returns (mentions, tuples); mention = (start, end, text), tuple =
+    (subj, pred, obj, rels, s_span, o_span). Shared by the Spark kernel
+    and the single-node oracle (eval.mirror_triples)."""
+    deps = [(i, int(h)) for i, h in enumerate(heads)]
     segs, _ = algo.segment_sentence(
         toks, deps, m["trie"], m["patterns"], m["prob"],
         m["deps_logprob"], m["default_logprob"],
     )
-    return algo.mentions_from_segments(segs, toks, pos, m["patterns"])
-
-
-def extract_tuples_py(toks, pos, heads, types, m) -> tuple[list, list]:
-    """Single-sentence end-to-end extraction. Returns (mentions, tuples);
-    tuple = (subj, pred, obj, rels, s_span, o_span). Shared by the Spark UDF
-    and the single-node oracle in tests."""
-    deps = [(i, int(h)) for i, h in enumerate(heads)]
-    ments = extract_mentions_py(toks, pos, deps, m)
+    ments = algo.mentions_from_segments(segs, toks, pos, m["patterns"])
     out = []
     if len(ments) < 2:
         return ments, out
@@ -90,69 +77,6 @@ def extract_tuples_py(toks, pos, heads, types, m) -> tuple[list, list]:
     return ments, out
 
 
-def mentions_df(sentences: DataFrame, bc_model) -> DataFrame:
-    """Entity-mention table (the canonicalization input)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = bc_model.value
-        for pdf in batches:
-            rows = []
-            for url, did, sid, toks, pos, heads in zip(
-                pdf["url"], pdf["doc_id"], pdf["sent_id"],
-                pdf["tokens"], pdf["pos"], pdf["dep_head"],
-            ):
-                deps = [(i, int(h)) for i, h in enumerate(heads)]
-                for (s, e, text) in extract_mentions_py(
-                        list(toks), list(pos), deps, m):
-                    rows.append((url, did, sid, s, e, text))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["url", "doc_id", "sent_id",
-                                   "start", "end", "text"]
-                )
-
-    cols = sentences.select("url", "doc_id", "sent_id", "tokens", "pos",
-                            "dep_head")
-    return cols.mapInPandas(run, schema=MENTIONS_SCHEMA)
-
-
-def tuples_df(sentences: DataFrame, bc_model) -> DataFrame:
-    """Candidate (subj, pred, obj) tuples, pre-ranking."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = bc_model.value
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("url", "doc_id", "sent_id", "subj", "pred", "obj",
-                    "rels", "subj_start", "subj_end", "obj_start", "obj_end")}
-            for url, did, sid, toks, pos, heads, types in zip(
-                pdf["url"], pdf["doc_id"], pdf["sent_id"],
-                pdf["tokens"], pdf["pos"], pdf["dep_head"], pdf["dep_type"],
-            ):
-                _m, tups = extract_tuples_py(
-                    list(toks), list(pos), list(heads), list(types), m)
-                for (subj, pred, obj, rels, sspan, ospan) in tups:
-                    out["url"].append(url)
-                    out["doc_id"].append(did)
-                    out["sent_id"].append(sid)
-                    out["subj"].append(subj)
-                    out["pred"].append(pred)
-                    out["obj"].append(obj)
-                    out["rels"].append(rels)
-                    out["subj_start"].append(sspan[0])
-                    out["subj_end"].append(sspan[1])
-                    out["obj_start"].append(ospan[0])
-                    out["obj_end"].append(ospan[1])
-            if out["url"]:
-                yield pd.DataFrame(
-                    {k: pd.Series(v, dtype=object) for k, v in out.items()}
-                )
-
-    cols = sentences.select("url", "doc_id", "sent_id", "tokens", "pos",
-                            "dep_head", "dep_type")
-    return cols.mapInPandas(run, schema=TUPLES_SCHEMA)
-
-
 EXTRACTION_SCHEMA = (
     "url string, doc_id long, sent_id int, kind string, "
     "start int, end int, text string, "
@@ -165,14 +89,12 @@ _EXTRACTION_COLS = [f.strip().split(" ")[0]
 
 
 def extraction_df(sentences: DataFrame, bc_model) -> DataFrame:
-    """Fused mention + tuple pass: ONE Viterbi segmentation per sentence
-    feeds BOTH tables, emitted as a tagged union (kind 'm' = mention row,
-    kind 't' = tuple row). Previously ``mentions_df`` and ``tuples_df``
-    were two separate corpus jobs and the tuples pass re-derived every
-    mention internally — the fused kernel does the shared work once and
-    halves the corpus scans for the stage. The pipeline checkpoints this
-    union partitioned by ``kind`` so each downstream table re-reads only
-    its own files (partition pruning)."""
+    """The extraction kernel: ONE Viterbi segmentation per sentence feeds
+    both the mention and the tuple table, emitted as a tagged union
+    (kind 'm' = mention row, kind 't' = tuple row). The pipeline
+    checkpoints this union partitioned by ``kind`` so each downstream
+    table re-reads only its own files (partition pruning); the stream
+    filters to kind 't' in the same plan."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         m = bc_model.value
@@ -199,3 +121,10 @@ def extraction_df(sentences: DataFrame, bc_model) -> DataFrame:
     cols = sentences.select("url", "doc_id", "sent_id", "tokens", "pos",
                             "dep_head", "dep_type")
     return cols.mapInPandas(run, schema=EXTRACTION_SCHEMA)
+
+
+def tuple_rows(extraction: DataFrame) -> DataFrame:
+    """The tuple table of an ``extraction_df`` union (its kind 't' rows)."""
+    return extraction.filter(F.col("kind") == "t").select(
+        "url", "doc_id", "sent_id", "subj", "pred", "obj", "rels",
+        "subj_start", "subj_end", "obj_start", "obj_end")

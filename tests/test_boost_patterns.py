@@ -2,9 +2,27 @@
 frequent_pattern_mining.h:236-258 loadExternalPatterns): sub-MIN_SUP noun
 chunks enter the pattern table floored to MIN_SUP and can become mentions."""
 
+import json
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from remine_spark import mining, nlp, pipeline, synth
+
+SENTS_SCHEMA = ("doc_id long, sent_id int, tokens array<string>, "
+                "pos array<string>, chunk_a array<int>, chunk_b array<int>")
+
+
+def _sents(spark, rows):
+    """Hand-built sentences with the stage-1 chunk span columns that
+    corpus.sentences_from_pages computes from the same tags."""
+    full = []
+    for (doc_id, sent_id, toks, pos) in rows:
+        spans = nlp.boost_chunk_spans(pos)
+        full.append((doc_id, sent_id, toks, pos, [a for a, _b in spans],
+                     [b for _a, b in spans]))
+    return spark.createDataFrame(full, SENTS_SCHEMA)
 
 
 def test_boost_chunk_spans_grammar():
@@ -34,9 +52,7 @@ def test_sub_minsup_chunk_floored_to_minsup(spark):
     for i in range(3, 18):
         rows.append((i, 0, ["acme", "acquired", "globex", "."],
                      ["NNP", "VBD", "NNP", "."]))
-    sents = spark.createDataFrame(
-        rows, "doc_id long, sent_id int, tokens array<string>, "
-              "pos array<string>")
+    sents = _sents(spark, rows)
     pats = mining.mine_patterns_boosted(sents, min_sup=10, max_len=6)
     got = {tuple(r.ngram): r.freq for r in pats.collect()}
     assert got.get(("stark", "wayne")) == 10          # floored boost
@@ -63,31 +79,29 @@ def test_boost_pattern_becomes_mention_end_to_end(spark, tmp_path):
     assert surfaces & mention_texts, "no boost pattern became a mention"
 
 
-def test_null_chunk_rows_fall_back_to_python_spans(spark):
-    """A resumed pre-chunk-upgrade sentences checkpoint is re-read with the
-    new schema, so chunk_a/chunk_b EXIST but are null in every row. Boost
-    patterns must not silently vanish: null-chunk rows route through the
-    python span generator and the result equals the no-chunk-column path."""
-    rows = []
-    for i in range(3):
-        rows.append((i, 0, ["stark", "wayne", "visited", "gotham", "."],
-                     ["NNP", "NNP", "VBD", "NNP", "."]))
-    for i in range(3, 18):
-        rows.append((i, 0, ["acme", "acquired", "globex", "."],
-                     ["NNP", "VBD", "NNP", "."]))
-    sents = spark.createDataFrame(
-        rows, "doc_id long, sent_id int, tokens array<string>, "
-              "pos array<string>")
-    with_null_chunks = sents.withColumn(
-        "chunk_a", F.lit(None).cast("array<int>")).withColumn(
-        "chunk_b", F.lit(None).cast("array<int>"))
-    want = {tuple(r.ngram): (r.boost_freq, r.pos_key)
-            for r in mining.boost_patterns(sents, max_len=6).collect()}
-    got = {tuple(r.ngram): (r.boost_freq, r.pos_key)
-           for r in mining.boost_patterns(with_null_chunks,
-                                          max_len=6).collect()}
-    assert want, "sanity: the corpus has boost chunks"
-    assert got == want
+def test_stale_layout_resume_refused(spark, tmp_path):
+    """A workdir stamped with another checkpoint layout (here: none, as
+    before the layout was recorded) is refused on resume instead of being
+    patched on read; resume=False recomputes and re-stamps it."""
+    wd = str(tmp_path / "wd")
+    pages = synth.pages_df(spark, 40, seed=1, num_partitions=2)
+    pipeline.run_pipeline(spark, pages, wd, inner_iters=2, transe_epochs=2,
+                          resume=False)
+    marker = os.path.join(wd, "input_fingerprint.json")
+    with open(marker) as f:
+        blob = json.load(f)
+    assert blob.pop("layout") == pipeline.CHECKPOINT_LAYOUT
+    with open(marker, "w") as f:
+        json.dump(blob, f)
+
+    with pytest.raises(ValueError, match="layout"):
+        pipeline.run_pipeline(spark, pages, wd, inner_iters=2,
+                              transe_epochs=2, resume=True)
+    out = pipeline.run_pipeline(spark, pages, wd, inner_iters=2,
+                                transe_epochs=2, resume=False)
+    assert out["triples"].count() > 0
+    with open(marker) as f:
+        assert json.load(f)["layout"] == pipeline.CHECKPOINT_LAYOUT
 
 
 def test_pos_key_expr_matches_python_tagger(spark):
@@ -130,12 +144,10 @@ def test_boost_rows_zero_fill_corpus_features(spark):
     for i in range(3, 18):
         rows.append((i, 0, ["acme", "acquired", "globex", "."],
                      ["NNP", "VBD", "NNP", "."]))
-    sents = (spark.createDataFrame(
-        rows, "doc_id long, sent_id int, tokens array<string>, "
-              "pos array<string>")
-        .withColumn("url", F.concat(F.lit("u"), F.col("doc_id")))
-        .withColumn("case_mask", F.expr("transform(tokens, t -> 0)"))
-        .withColumn("dep_head", F.expr("transform(tokens, t -> 0)")))
+    sents = (_sents(spark, rows)
+             .withColumn("url", F.concat(F.lit("u"), F.col("doc_id")))
+             .withColumn("case_mask", F.expr("transform(tokens, t -> 0)"))
+             .withColumn("dep_head", F.expr("transform(tokens, t -> 0)")))
     pats = mining.mine_patterns_boosted(sents, min_sup=10, max_len=6)
     feats = classifier.featurize(pats, sentences=sents)
     by_key = {r["ngram_key"]: r for r in feats.collect()}

@@ -11,6 +11,8 @@
   the obvious Counter-based per-doc computation.
 - host_doc_stats: a NULL-text document counts as zero tokens on both Spark
   and the DuckDB oracle.
+- quality_gopher_filter: a document under 3 tokens is emitted rejected (every
+  flag 0) on both Spark and the DuckDB oracle.
 """
 
 import collections
@@ -134,8 +136,9 @@ def test_quality_gopher_filter_matches_python(spark):
     seen_fail = {k: False for k in ("ok_len", "ok_stop", "ok_rep")}
     for doc_id, text in docs.items():
         toks = [x for x in text.split(" ") if x]
-        if len(toks) < 3:
-            assert doc_id not in rows
+        if len(toks) < 3:  # no 3-gram to measure: rejected on every flag
+            assert all(v == 0 for k, v in rows[doc_id].items()
+                       if k != "doc_id"), doc_id
             continue
         grams = [" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)]
         cnt = collections.Counter(grams)
@@ -159,6 +162,31 @@ def test_quality_gopher_filter_matches_python(spark):
                 seen_fail[k] = True
     # thresholds must actually split the fixture corpus on these rules
     assert all(seen_fail.values()), seen_fail
+
+
+def test_quality_gopher_filter_short_docs_match_oracle(spark, tmp_path):
+    # a 2-token and a NULL-text document have no 3-gram: both engines emit
+    # them with every flag 0 rather than dropping them
+    long = " ".join(["the cat sat on a mat in the house of"] * 2
+                    + ["and then some more words"])
+    docs = pa.table({
+        "doc_id": pa.array([1, 2, 3], pa.int64()),
+        "text": [long, "two words", None],
+    })
+    pq.write_table(docs, str(tmp_path / "documents.parquet"))
+    cols = ("ok_len", "ok_tok_len", "ok_stop", "ok_rep", "passes")
+    got = {r["doc_id"]: tuple(r[c] for c in cols) for r in
+           textstats.quality_gopher_filter(spark, str(tmp_path)).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"'{tmp_path / 'documents.parquet'}'")
+    cur = con.execute(catalog.QUERIES["quality_gopher_filter"]["sql"])
+    names = [c[0] for c in cur.description]
+    oracle = {r[names.index("doc_id")]: tuple(r[names.index(c)] for c in cols)
+              for r in cur.fetchall()}
+    assert got == oracle
+    assert got[2] == got[3] == (0, 0, 0, 0, 0)
+    assert got[1][0] == 1  # the long doc is measured (25 tokens)
 
 
 def test_host_doc_stats_null_text_matches_oracle(spark, tmp_path):

@@ -156,34 +156,3 @@ def test_salting_bounds_zipf_skew(run, spark):
     # bucket count tracks write parallelism; every bucket is populated
     from remine_spark import pipeline as _p
     assert len(by_bucket) == _p._n_buckets(spark)
-
-
-def test_fused_extraction_matches_two_pass(run, spark):
-    """The fused extraction kernel (one segmentation per sentence feeding
-    both tables) must emit exactly the rows the legacy two-pass
-    mentions_df/tuples_df kernels emit."""
-    from remine_spark import tuples as tuples_mod
-    wd, _out, _docs = run
-    m = pipeline.load_model(wd)
-    # re-read from disk: earlier tests rewrite checkpoints, invalidating
-    # the fixture DataFrames' cached file listings
-    sentences = spark.read.parquet(os.path.join(wd, "sentences"))
-    extraction = spark.read.parquet(os.path.join(wd, "extraction"))
-    bc = spark.sparkContext.broadcast(m.payload())
-    try:
-        want_m = {tuple(r) for r in
-                  tuples_mod.mentions_df(sentences, bc).collect()}
-        want_t = {(r.url, r.doc_id, r.sent_id, r.subj, r.pred, r.obj,
-                   tuple(r.rels), r.subj_start, r.subj_end,
-                   r.obj_start, r.obj_end)
-                  for r in tuples_mod.tuples_df(sentences, bc).collect()}
-        got_m = {(r.url, r.doc_id, r.sent_id, r.start, r.end, r.text)
-                 for r in extraction.filter("kind = 'm'").collect()}
-        got_t = {(r.url, r.doc_id, r.sent_id, r.subj, r.pred, r.obj,
-                  tuple(r.rels), r.subj_start, r.subj_end,
-                  r.obj_start, r.obj_end)
-                 for r in extraction.filter("kind = 't'").collect()}
-    finally:
-        bc.destroy()
-    assert got_m == want_m
-    assert got_t == want_t

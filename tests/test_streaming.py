@@ -1,14 +1,17 @@
-"""Structured Streaming layer tests: incremental ingest exactly-once,
-watermarked windows vs batch equivalence, and the custom stateful operator."""
+"""Structured Streaming layer tests: incremental ingest exactly-once, the
+incremental KG update against the batch run, epoch replay, and streaming
+dedup."""
 
+import glob
 import os
 import shutil
+import tempfile
 
 import pytest
 
 from remine_spark import synth
 from remine_spark.corpus import sentences_from_pages
-from remine_spark.streaming import ingest, stateful, windows
+from remine_spark.streaming import ingest
 
 
 @pytest.fixture()
@@ -49,115 +52,40 @@ def test_incremental_ingest_exactly_once(spark, tmpdirs):
     assert spark.read.parquet(tmpdirs["out"]).count() == total
 
 
-def test_windowed_counts_stream_matches_batch(spark, tmpdirs):
-    """The windowed agg definition runs on both a stream and a batch frame
-    and produces identical finalized windows under availableNow."""
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events.write.mode("overwrite").parquet(tmpdirs["in"])
-
-    stream = spark.readStream.schema(events.schema).parquet(tmpdirs["in"])
-    q = (
-        windows.windowed_event_counts(stream)
-        .writeStream.format("parquet")
-        .option("path", tmpdirs["out"])
-        .option("checkpointLocation", tmpdirs["ckpt"])
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {tuple(r) for r in spark.read.parquet(tmpdirs["out"]).collect()}
-
-    want_df = windows.windowed_event_counts(events)
-    want = {tuple(r) for r in want_df.collect()}
-    # append-mode emits only watermark-finalized windows: a suffix of event
-    # time may be withheld, but everything emitted must match batch exactly.
-    assert got, "no finalized windows emitted"
-    assert got <= want
-    missing = want - got
-    if missing:  # only the trailing horizon may be withheld
-        horizon = max(r[0] for r in want) - 30 * 60
-        assert all(r[0] >= horizon for r in missing)
-
-
-def test_stateful_running_totals(spark, tmpdirs):
-    """applyInPandasWithState carries state across micro-batches: feeding
-    the same events in two batches yields cumulative totals."""
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    half = events.filter("event_id % 2 = 0")
-    rest = events.filter("event_id % 2 = 1")
-    half.write.mode("append").parquet(tmpdirs["in"])
-    rest.write.mode("append").parquet(tmpdirs["in"])
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)  # force multiple micro-batches
-        .parquet(tmpdirs["in"])
-    )
-    q = (
-        stateful.running_totals(stream)
-        .writeStream.format("memory")
-        .queryName("totals")
-        .option("checkpointLocation", tmpdirs["ckpt"])
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    # final update per key == batch groupBy on the full input
-    updates = spark.sql("select * from totals").collect()
-    final = {}
-    for r in updates:  # later updates overwrite earlier ones per key
-        cur = final.get(r.event_type)
-        if cur is None or r.n_events >= cur[0]:
-            final[r.event_type] = (r.n_events, r.sum_value)
-    want = {
-        r.event_type: (r.n, round(r.s, 4))
-        for r in events.groupBy("event_type")
-        .agg(__import__("pyspark").sql.functions.count("*").alias("n"),
-             __import__("pyspark").sql.functions.sum("value").alias("s"))
-        .collect()
-    }
-    got = {k: (n, round(s, 4)) for k, (n, s) in final.items()}
-    assert got == want
-
-
 def test_incremental_kg_update(spark, tmpdirs, tmp_path):
-    """Batch-trained model + streaming foreachBatch: new pages produce
-    triples equivalent to a batch run of the same extraction stages."""
-    from pyspark.sql import functions as F
-
-    from remine_spark import pipeline, tuples as tuples_mod
+    """Batch-trained model + streaming foreachBatch: pages streamed through
+    the frozen model yield exactly the batch run's tuples over the same
+    pages (one extraction kernel serves both paths), and a relaunch with no
+    new files appends nothing."""
+    from remine_spark import pipeline
     from remine_spark.streaming import kg_update
 
     # 1. batch run trains + saves the model
     wd = str(tmp_path / "batch_wd")
-    train_pages = synth.pages_df(spark, 80, seed=21, num_partitions=3)
-    pipeline.run_pipeline(spark, train_pages, wd,
-                          inner_iters=2, transe_epochs=2, resume=False)
+    train_pages = synth.pages_df(spark, 120, seed=21, num_partitions=3)
+    batch = pipeline.run_pipeline(spark, train_pages, wd, inner_iters=2,
+                                  transe_epochs=2, resume=False)
 
-    # 2. new pages arrive as files; stream them through the frozen model
-    new_pages = synth.pages_df(spark, 40, seed=99, num_partitions=2)
+    # 2. the first 40 training pages arrive as files; stream them through
+    # the frozen model
+    new_pages = synth.pages_df(spark, 40, seed=21, num_partitions=2)
     new_pages.write.mode("append").parquet(tmpdirs["in"])
     kg_update.run_incremental_kg(
         spark, tmpdirs["in"], tmpdirs["out"], tmpdirs["ckpt"], wd)
     got = spark.read.parquet(tmpdirs["out"])
-    n1 = got.count()
-    assert n1 > 0
     assert {"subj", "pred", "obj", "bucket", "epoch_id"} <= set(got.columns)
-
-    # equivalence: same extraction on the same input in batch
-    m = pipeline.load_model(wd)
-    bc = spark.sparkContext.broadcast(m.payload())
-    want = tuples_mod.tuples_df(
-        sentences_from_pages(spark.read.parquet(tmpdirs["in"])), bc)
-    assert n1 == want.count()
+    cols = ["url", "sent_id", "subj", "pred", "obj"]
+    streamed = sorted(tuple(r) for r in got.select(*cols).collect())
+    urls = {r.url for r in new_pages.select("url").collect()}
+    want = sorted(tuple(r) for r in batch["tuples"].select(*cols).collect()
+                  if r.url in urls)
+    assert streamed, "the slice streamed no tuples"
+    assert streamed == want
 
     # 3. relaunch with no new files → nothing appended
     kg_update.run_incremental_kg(
         spark, tmpdirs["in"], tmpdirs["out"], tmpdirs["ckpt"], wd)
-    assert spark.read.parquet(tmpdirs["out"]).count() == n1
+    assert spark.read.parquet(tmpdirs["out"]).count() == len(streamed)
 
 
 def test_epoch_replay_is_idempotent(spark, tmp_path):
@@ -198,6 +126,23 @@ def test_streaming_kg_update_catalog_entry(spark):
     assert df.count() > 0
     # rows-only by design: a foreachBatch stream has no DuckDB oracle
     assert "streaming_kg_update" not in entry.oracle_sql()
+
+
+def test_streaming_entries_reuse_their_temp_dir(spark):
+    """The streaming catalog entries of ``__spark_entry__`` each keep one
+    fixed temp directory, emptied per call, instead of leaking a fresh
+    one per call."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    for name, prefix in (("streaming_kg_update", "remine_stream_entry"),
+                         ("streaming_dedup", "remine_sdedup")):
+        pattern = os.path.join(tempfile.gettempdir(), prefix + "*")
+        counts = []
+        for _ in range(2):
+            assert qs[name](spark, "/root/testdata/sf0.001").count() > 0
+            counts.append(len(glob.glob(pattern)))
+        assert counts[0] == counts[1] > 0, (name, counts)
 
 
 def test_dedup_stream_first_arrival_wins_across_runs(spark, tmpdirs):
