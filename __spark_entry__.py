@@ -12,6 +12,7 @@
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
@@ -53,11 +54,19 @@ def _pages_from_documents(spark: SparkSession, sf_dir: str,
 def _tmp_dir(kind: str, sf_dir: str) -> str:
     """A fixed directory per entry kind and scale factor under the temp
     dir, named with the checkpoint layout so a workdir of an older layout
-    is never resumed."""
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"remine_{kind}_layout{_pipeline.CHECKPOINT_LAYOUT}_"
-        + os.path.basename(os.path.normpath(sf_dir)))
+    is never resumed. Its siblings of other layouts
+    (``remine_<kind>_<tag>_<sf>``, e.g. ``remine_entry_v5_sf0.001``) are
+    removed: no code reads them again. A tag holds no ``_``, so the
+    directories of other kinds and scale factors are left alone."""
+    tmp, sf = tempfile.gettempdir(), os.path.basename(os.path.normpath(sf_dir))
+    name = f"remine_{kind}_layout{_pipeline.CHECKPOINT_LAYOUT}_{sf}"
+    prefix, suffix = f"remine_{kind}_", f"_{sf}"
+    for old in glob.glob(os.path.join(tmp, glob.escape(prefix) + "*"
+                                      + glob.escape(suffix))):
+        tag = os.path.basename(old)[len(prefix):-len(suffix)]
+        if "_" not in tag and os.path.basename(old) != name:
+            shutil.rmtree(old, ignore_errors=True)
+    return os.path.join(tmp, name)
 
 
 def _flagship_workdir(sf_dir: str) -> str:
@@ -186,7 +195,6 @@ def _correctness_history() -> dict[str, int]:
     in the repo root. A row that recorded an error (other than the by-design
     ``no_oracle`` rows-only marker) does NOT count — a red row means the
     entry still needs verification, so it sorts as never-recorded."""
-    import glob
     import json
     import re
 

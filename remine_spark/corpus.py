@@ -2,8 +2,9 @@
 
 Spark-first design: the page table is scanned once (columns pruned to what
 the stage needs), language filtering is a Catalyst predicate pushed to the
-parquet/Iceberg scan, and the two NLP passes run as Arrow-batched pandas
-UDFs over whole columns (input_hint: no per-row Python).
+parquet/Iceberg scan, and html extraction, tagging and parsing run in one
+Arrow-batched ``mapInPandas`` pass (one Python stage, text never returns
+to the JVM).
 
 Reference analog: ``preprocessing.py:81-116`` (corpus load) +
 ``documents.h:149-316`` (columnar token arrays) + ``documents.h:318-358``
@@ -18,7 +19,7 @@ import re
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from . import nlp
 
@@ -49,16 +50,6 @@ def doc_id_of(url: str) -> int:
     return int.from_bytes(hashlib.md5(url.encode()).digest()[:8], "big") >> 1
 
 
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_text)
-
-
-@F.pandas_udf(T.LongType())
-def doc_id_udf(url: pd.Series) -> pd.Series:
-    return url.map(doc_id_of)
-
-
 SENTENCES_SCHEMA = (
     "url string, doc_id long, sent_id int, tokens array<string>, "
     "pos array<string>, dep_head array<int>, dep_type array<string>, "
@@ -71,9 +62,9 @@ def _analyze_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         out = {k: [] for k in
                ("url", "doc_id", "sent_id", "tokens", "pos", "dep_head",
                 "dep_type", "case_mask", "chunk_a", "chunk_b")}
-        for url, text in zip(pdf["url"], pdf["text"]):
+        for url, html in zip(pdf["url"], pdf["html"]):
             did = doc_id_of(url)
-            for sid, rec in enumerate(nlp.analyze(text)):
+            for sid, rec in enumerate(nlp.analyze(extract_text(html))):
                 out["url"].append(url)
                 out["doc_id"].append(did)
                 out["sent_id"].append(sid)
@@ -97,17 +88,13 @@ def _analyze_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-def sentences_from_pages(pages: DataFrame, lang: str = "en",
-                         use_html: bool = True) -> DataFrame:
+def sentences_from_pages(pages: DataFrame, lang: str = "en") -> DataFrame:
     """pages → sentences(url, doc_id, sent_id, tokens, pos, dep_head, dep_type, case_mask).
 
     The lang filter is a plain predicate (pushed into the scan); only
-    (url, html|text) survive column pruning. Extraction + tagging + parsing
-    happen in one Arrow pass so text never round-trips to the JVM twice.
+    (url, html) survive column pruning. Extraction + tagging + parsing
+    happen in one Arrow pass, so the extracted text never crosses back to
+    the JVM.
     """
-    src = pages.filter(F.col("lang") == lang)
-    if use_html:
-        src = src.select("url", extract_text_udf(F.col("html")).alias("text"))
-    else:
-        src = src.select("url", "text")
+    src = pages.filter(F.col("lang") == lang).select("url", "html")
     return src.mapInPandas(_analyze_batches, schema=SENTENCES_SCHEMA)

@@ -24,13 +24,16 @@ Scale notes
 - The subtree-signature table is bounded by the combinatorics of unordered
   forests on ≤ MAX_LEN nodes (a few hundred shapes), so collecting it to the
   driver is safe at any corpus size.
-- Each EM iteration is one full segmentation pass (mapInPandas) + one hash
-  agg — no joins, no driver-side per-row loops.
+- The census and each EM pass are one Spark job: a mapInPandas whose
+  tasks each yield their compacted counts (at most distinct keys rows:
+  signatures + chosen pattern ids), summed on the driver — no shuffle, no
+  joins, and the driver loop touches tasks × keys rows, not sentences.
 """
 
 from __future__ import annotations
 
 import math
+from collections import Counter
 from collections.abc import Iterator
 
 import pandas as pd
@@ -141,25 +144,6 @@ class SegModel:
             "default_logprob": math.log(EPS),
         }
 
-    def payload_static(self) -> dict:
-        """The per-outer-iteration IMMUTABLE part of the model: the EM
-        inner loop (adjustConstraints) only re-estimates ``deps_prob``;
-        patterns/trie/probs change solely at rectify_frequency's
-        ``_rebuild``. Broadcasting this once per outer iteration instead
-        of per inner pass cuts ~6/7 of the broadcast volume — and the
-        per-pass fetch+unpickle cost in every python worker scaled with
-        worker count, so the repeat broadcast was an anti-scaler. The
-        tiny ``deps_logprob`` dict (bounded by the ≤6-node unordered
-        forest combinatorics — a few hundred entries) rides the task
-        closure per pass instead."""
-        return {
-            "patterns": self.patterns,
-            "trie": self.trie,
-            "prob": self.prob,
-            "prob_tuple": self.prob_tuple,
-            "default_logprob": math.log(EPS),
-        }
-
 
 def model_from_patterns(
     patterns_df: DataFrame, tree_total: dict[str, int],
@@ -182,25 +166,26 @@ def model_from_patterns(
 # --------------------------------------------------------------------------
 
 def subtree_census(sentences: DataFrame, max_len: int = 6) -> dict[str, int]:
+    """signature → number of ≤max_len-node subtrees of that shape, in ONE
+    Spark job: each task yields its own compacted counts (a few hundred
+    rows) and the driver sums them — integer counts, exact in any order."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        sigs: Counter = Counter()
         for pdf in batches:
-            sigs: dict[str, int] = {}
             for heads in pdf["dep_head"]:
                 deps = [(i, int(h)) for i, h in enumerate(heads)]
-                for s in algo.census_signatures(deps, max_len):
-                    sigs[s] = sigs.get(s, 0) + 1
-            if sigs:
-                yield pd.DataFrame(
-                    {"signature": list(sigs), "cnt": list(sigs.values())}
-                )
+                sigs.update(algo.census_signatures(deps, max_len))
+        if sigs:
+            yield pd.DataFrame(
+                {"signature": list(sigs), "cnt": list(sigs.values())}
+            )
 
-    counted = (
-        sentences.select("dep_head")
-        .mapInPandas(gen, schema="signature string, cnt long")
-        .groupBy("signature")
-        .agg(F.sum("cnt").alias("total"))
-    )
-    return {r.signature: int(r.total) for r in counted.collect()}
+    total: Counter = Counter()
+    for r in (sentences.select("dep_head")
+              .mapInPandas(gen, schema="signature string, cnt long")
+              .collect()):
+        total[r.signature] += r.cnt
+    return dict(total)
 
 
 # --------------------------------------------------------------------------
@@ -264,32 +249,28 @@ def segment_sentences(sentences: DataFrame, bc_model, rp_only: bool = False) -> 
 # M9 + A7/A8: EM passes (driven by pipeline.run_pipeline)
 # --------------------------------------------------------------------------
 
-def _em_pass(sentences: DataFrame, bc_static, deps_logprob: dict) -> DataFrame:
-    """One EM statistics pass, batch-compacted: Viterbi each sentence but
-    emit only per-batch aggregated rows (key, cnt, energy) — signature
+def _em_pass(sentences: DataFrame, bc_model, deps_logprob: dict) -> DataFrame:
+    """One EM statistics pass, task-compacted: Viterbi each sentence but
+    emit only the task's aggregated rows (key, cnt, energy) — signature
     keys prefixed 's:', pattern ids prefixed 'p:', plus one 'energy'
-    partial per batch. The per-sentence segments/sigs arrays never cross
-    the Arrow boundary (they were ~10× the useful payload) and the
-    downstream groupBy touches hundreds of rows per task instead of one
-    per sentence. Both EM consumers (adjust_constraints: signatures +
-    energy; rectify_frequency: chosen-pattern counts) read from this one
-    kernel.
+    partial per task. The per-sentence segments/sigs arrays never cross
+    the Arrow boundary, and the driver receives at most tasks × distinct
+    keys rows. Both EM consumers (adjust_constraints: signatures + energy;
+    rectify_frequency: chosen-pattern counts) read from this one kernel.
 
-    ``bc_static`` broadcasts only the immutable trie/patterns/probs
-    (SegModel.payload_static, shared across every pass of an outer
-    iteration); the per-pass ``deps_logprob`` dict ships in the task
-    closure (a few hundred floats)."""
+    ``bc_model`` broadcasts ``SegModel.payload()`` once per outer
+    iteration (the trie/patterns/probs change only at rectify_frequency);
+    the per-pass ``deps_logprob`` dict ships in the task closure (a few
+    hundred floats)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import Counter
-
-        m = bc_static.value
+        m = bc_model.value
         trie, prob = m["trie"], m["prob"]
         dlp, dflt = deps_logprob, m["default_logprob"]
         viterbi, sig = algo.viterbi_deps, algo.tree_signature
+        counts: Counter = Counter()
+        energy_sum = 0.0
         for pdf in batches:
-            counts: Counter = Counter()
-            energy_sum = 0.0
             for toks, heads in zip(pdf["tokens"], pdf["dep_head"]):
                 toks = list(toks)
                 deps = [(i, int(h)) for i, h in enumerate(heads)]
@@ -311,92 +292,72 @@ def _em_pass(sentences: DataFrame, bc_static, deps_logprob: dict) -> DataFrame:
                     i = j
                 energy = f[len(toks)]
                 energy_sum += float(energy) if energy > -1e80 else 0.0
-            keys = list(counts.keys()) + ["energy"]
-            cnts = [int(counts[k]) for k in counts] + [0]
-            yield pd.DataFrame({
-                "key": pd.Series(keys, dtype=object),
-                "cnt": pd.Series(cnts, dtype="int64"),
-                "energy": pd.Series([0.0] * (len(keys) - 1) + [energy_sum],
-                                    dtype="float64"),
-            })
+        yield pd.DataFrame({
+            "key": pd.Series(list(counts) + ["energy"], dtype=object),
+            "cnt": pd.Series(list(counts.values()) + [0], dtype="int64"),
+            "energy": pd.Series([0.0] * len(counts) + [energy_sum],
+                                dtype="float64"),
+        })
 
     cols = sentences.select("tokens", "dep_head")
     return cols.mapInPandas(run, schema="key string, cnt long, energy double")
 
 
 def _em_stats(spark: SparkSession, sentences: DataFrame, model: SegModel,
-              bc_static=None) -> tuple[dict, dict, float]:
-    """(signature counts, chosen-pattern counts, total energy) in ONE job.
-
-    Pass ``bc_static`` (a broadcast of ``model.payload_static()``) to
-    amortize the trie broadcast across passes; without it a one-shot
-    broadcast is created and destroyed here."""
-    own = bc_static is None
-    if own:
-        bc_static = spark.sparkContext.broadcast(model.payload_static())
-    rows = (
-        _em_pass(sentences, bc_static, model.log_deps())
-        .groupBy("key")
-        .agg(F.sum("cnt").alias("cnt"), F.sum("energy").alias("energy"))
-        .collect()
-    )
-    if own:
-        bc_static.destroy()
-    sig_cnt, pat_cnt, energy = {}, {}, 0.0
-    for r in rows:
+              bc_model) -> tuple[dict, dict, float]:
+    """(signature counts, chosen-pattern counts, total energy) in ONE Spark
+    job: the task rows of ``_em_pass`` are collected and summed on the
+    driver. The counts are integers, exact in any order. The energy only
+    feeds adjust_constraints' convergence test; its per-task partials
+    depend on how the input is partitioned, and ``math.fsum`` (correctly
+    rounded, so independent of the order the partials arrive in) sums
+    them."""
+    sig_cnt: Counter = Counter()
+    pat_cnt: Counter = Counter()
+    energies = []
+    for r in _em_pass(sentences, bc_model, model.log_deps()).collect():
         if r.key == "energy":
-            energy = float(r.energy or 0.0)
+            energies.append(r.energy)
         elif r.key.startswith("s:"):
-            sig_cnt[r.key[2:]] = int(r.cnt)
+            sig_cnt[r.key[2:]] += r.cnt
         else:
-            pat_cnt[int(r.key[2:])] = int(r.cnt)
-    return sig_cnt, pat_cnt, energy
+            pat_cnt[int(r.key[2:])] += r.cnt
+    return dict(sig_cnt), dict(pat_cnt), math.fsum(energies)
 
 
 def adjust_constraints(
-    spark: SparkSession, sentences: DataFrame, model: SegModel,
-    inner_iters: int = 10, rel_eps: float = EPS, bc_static=None,
+    spark: SparkSession, sentences: DataFrame, model: SegModel, bc_model,
+    inner_iters: int = 10, rel_eps: float = EPS,
 ) -> list[float]:
     """Inner EM loop (main.cpp:187-198 + adjustConstraints
     segmentation.h:884-967): segment → count chosen multi-word span
     signatures → deps_prob[sig] = cnt / total, until relative energy change
-    < rel_eps. Returns the energy trajectory. One batch-compacted corpus
-    pass per iteration (signature counts + energy ride the same job);
-    the trie broadcast is created ONCE for the loop (only deps_prob
-    changes between passes)."""
-    own = bc_static is None
-    if own:
-        bc_static = spark.sparkContext.broadcast(model.payload_static())
+    < rel_eps. Returns the energy trajectory. One task-compacted corpus
+    pass per iteration (signature counts + energy ride the same job) over
+    the ``bc_model`` broadcast of ``model.payload()``."""
     energies: list[float] = []
     last = 1e100
-    try:
-        for _ in range(inner_iters):
-            cnts, _pat, energy = _em_stats(
-                spark, sentences, model, bc_static=bc_static)
-            model.deps_prob = {
-                s: cnts.get(s, 0) / t
-                for s, t in model.tree_total.items() if t > 0
-            }
-            energies.append(energy)
-            if abs(energy - last) / abs(last) < rel_eps:
-                break
-            last = energy
-    finally:
-        if own:
-            bc_static.destroy()
+    for _ in range(inner_iters):
+        cnts, _pat, energy = _em_stats(spark, sentences, model, bc_model)
+        model.deps_prob = {
+            s: cnts.get(s, 0) / t
+            for s, t in model.tree_total.items() if t > 0
+        }
+        energies.append(energy)
+        if abs(energy - last) / abs(last) < rel_eps:
+            break
+        last = energy
     return energies
 
 
 def rectify_frequency(
-    spark: SparkSession, sentences: DataFrame, model: SegModel,
-    bc_static=None,
+    spark: SparkSession, sentences: DataFrame, model: SegModel, bc_model,
 ) -> SegModel:
     """A8 (rectifyFrequencyDeps, segmentation.h:816-882): pattern freq :=
     number of times Viterbi chose it; then rebuild trie/probs (patterns with
     rectified freq 0 drop out of the trie for multi-word, segmentation.h:46).
     """
-    _sig, cnt, _energy = _em_stats(spark, sentences, model,
-                                   bc_static=bc_static)
+    _sig, cnt, _energy = _em_stats(spark, sentences, model, bc_model)
     new_patterns = [
         (toks, cnt.get(pid, 0), q, ind)
         for pid, (toks, _f, q, ind) in enumerate(model.patterns)

@@ -26,16 +26,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import fsio, mining, model as model_mod, transe, tuples as tuples_mod
 from .corpus import sentences_from_pages
 
-# Salted-sink bucket count. The salt exists to defuse head-entity skew at
-# the final shuffle/write; its COUNT should track the write parallelism,
-# not a constant: r2's fixed 64 buckets made the two partitioned sinks a
-# ~19 s fan-in floor at local[32] (and measured catastrophically at 128
-# dirs: dynamic-partition commit cost is per-directory). Default:
-# parallelism/2 bounded to [8, 4096] — single-digit file counts on a
-# laptop, ~4k on a 1000-executor cluster; override with
-# REMINE_TRIPLE_BUCKETS.
-TRIPLE_BUCKETS = int(os.environ.get("REMINE_TRIPLE_BUCKETS", "0"))
-
 # Stage-checkpoint schema version, recorded in every workdir's
 # input_fingerprint.json. Bump it when any stage's output schema or
 # semantics change: resume=True then refuses the older workdir instead of
@@ -46,8 +36,13 @@ CHECKPOINT_LAYOUT = 6
 
 
 def _n_buckets(spark: SparkSession) -> int:
-    if TRIPLE_BUCKETS > 0:
-        return TRIPLE_BUCKETS
+    """Salted-sink bucket count. The salt exists to defuse head-entity skew
+    at the final shuffle/write; its COUNT tracks the write parallelism, not
+    a constant: r2's fixed 64 buckets made the two partitioned sinks a
+    ~19 s fan-in floor at local[32] (and measured catastrophically at 128
+    dirs: dynamic-partition commit cost is per-directory). parallelism/2
+    bounded to [8, 4096] gives single-digit file counts on a laptop and ~4k
+    on a 1000-executor cluster."""
     return min(4096, max(8, spark.sparkContext.defaultParallelism // 2))
 
 
@@ -325,17 +320,18 @@ def run_pipeline(
             tree_total = model_mod.subtree_census(sentences, max_len)
             m = model_mod.model_from_patterns(patterns_df, tree_total)
         for it in range(start_iter, outer_iters):
-            # one trie broadcast per outer iteration (the inner loop only
-            # re-estimates deps_prob; see SegModel.payload_static)
-            bc_static = spark.sparkContext.broadcast(m.payload_static())
+            # one model broadcast per outer iteration: the inner passes
+            # only re-estimate deps_prob, which each pass ships in its
+            # task closure (see model._em_pass)
+            bc_model = spark.sparkContext.broadcast(m.payload())
             try:
                 model_mod.adjust_constraints(spark, sentences, m,
                                              inner_iters=inner_iters,
-                                             bc_static=bc_static)
+                                             bc_model=bc_model)
                 m = model_mod.rectify_frequency(spark, sentences, m,
-                                                bc_static=bc_static)
+                                                bc_model=bc_model)
             finally:
-                bc_static.destroy()
+                bc_model.destroy()
             save_model(workdir, m, "segmodel_partial.json", outer_done=it + 1)
         save_model(workdir, m)
     _mark("em_fit")

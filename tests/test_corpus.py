@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from remine_spark import corpus, synth
+from remine_spark import corpus, nlp, synth
 
 
 def test_extract_text_byte_identical_pure():
@@ -23,16 +23,23 @@ def test_extract_text_fallback_strips_tags():
     assert corpus.extract_text(None) == ""
 
 
-def test_extract_udf_byte_identical_on_spark(spark):
-    """The invariant the driver cares about: extract(html) == text per url,
-    through the actual Arrow UDF path, regardless of partitioning."""
-    pages = synth.pages_df(spark, 200, seed=42, num_partitions=7)
-    bad = (
-        pages.select("url", "text", corpus.extract_text_udf("html").alias("etext"))
-        .filter(F.col("etext") != F.col("text"))
-        .count()
-    )
-    assert bad == 0
+def test_sentences_from_pages_match_pure_analyze(spark):
+    """The invariant the driver cares about, through the Spark path:
+    extraction runs inside the one Arrow pass, and its sentences equal
+    the pure-Python analysis of each doc's text, at any partitioning."""
+    docs = {d["url"]: d for d in synth.generate_docs(200, seed=42)}
+    want = sorted(
+        (url, sid, rec["tokens"])
+        for url, d in docs.items() if d["lang"] == "en"
+        for sid, rec in enumerate(nlp.analyze(d["text"])))
+    assert want
+    for n in (7, 2):
+        pages = synth.pages_df(spark, 200, seed=42, num_partitions=n)
+        got = sorted(
+            (r.url, r.sent_id, list(r.tokens))
+            for r in corpus.sentences_from_pages(pages)
+            .select("url", "sent_id", "tokens").collect())
+        assert got == want, n
 
 
 def test_sentences_alignment_and_determinism(spark):

@@ -145,6 +145,24 @@ def test_streaming_entries_reuse_their_temp_dir(spark):
         assert counts[0] == counts[1] > 0, (name, counts)
 
 
+def test_entry_temp_dir_removes_older_layouts(tmp_path, monkeypatch):
+    """An entry's temp dir of an older layout is removed when the current
+    one is named; other kinds and scale factors keep theirs."""
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stale = ["remine_entry_v5_sf0.001", "remine_entry_layout5_sf0.001"]
+    kept = ["remine_stream_entry_layout5_sf0.001", "remine_sdedup_v5_sf0.001",
+            "remine_entry_layout5_sf0.01"]
+    for name in stale + kept:
+        (tmp_path / name / "triples").mkdir(parents=True)
+    current = entry._tmp_dir("entry", "/data/sf0.001")
+    os.makedirs(current)
+    assert entry._tmp_dir("entry", "/data/sf0.001/") == current
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        kept + [os.path.basename(current)])
+
+
 def test_dedup_stream_first_arrival_wins_across_runs(spark, tmpdirs):
     """Streaming exact dedup: one row per distinct content fingerprint,
     with the seen-set carried across separate availableNow runs through
