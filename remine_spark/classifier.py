@@ -498,14 +498,14 @@ def assign_quality_ml(patterns: DataFrame, rf_model, assembler,
     probability of that class; unigram POS overrides verbatim
     (predict_quality.h:143-155). Multi-word rows score through the
     multi-word forest, unigram rows through the unigram forest (the
-    reference's two-classifier split). Scoring is JVM-side (pyspark.ml
+    reference's two-classifier split); ``rf_model`` is the
+    ``{"multi": ..., "uni": ...}`` dict that :func:`fit_quality_forest`
+    returns. Scoring is JVM-side (pyspark.ml
     broadcast models), no python in the loop. ``sentences`` (or the
     shared ``prefeaturized`` table) must match what
     :func:`fit_quality_forest` saw (same featurization)."""
     from pyspark.ml.functions import vector_to_array
 
-    if not isinstance(rf_model, dict):  # single-forest compatibility
-        rf_model = {"multi": rf_model, "uni": rf_model}
     base = (prefeaturized if prefeaturized is not None
             else featurize(patterns, sentences=sentences))
     feats = assembler.transform(base)

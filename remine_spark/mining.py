@@ -10,10 +10,15 @@ boundaries are respected by construction (n-grams are generated inside the
 per-sentence array row, mirroring isEndOfSentence pruning at
 frequent_pattern_mining.h:364,411).
 
-Punctuation-crossing multi-grams are pruned pre-aggregation: GetPuncCost
+Punctuation-crossing multi-grams are never generated: GetPuncCost
 (segmentation.h:355-358) makes them -INF at segmentation time, so counting
-them would be wasted shuffle volume. Catalyst pushes this filter below the
-explode.
+them would be wasted shuffle volume; candidates come from the sentence's
+punctuation-free segments only.
+
+The patterns stage is one lazy plan: the mined survivors and the M14
+chunk-boost table meet in a single full outer join, so the corpus
+explode-agg appears once in the plan, with no cache, and runs inside the
+action that consumes it (the pipeline's patterns checkpoint write).
 """
 
 from __future__ import annotations
@@ -95,83 +100,42 @@ def mine_patterns(
     rebuilt on the min_sup survivors only (the tagger is context-free,
     so survivor-side tagging is occurrence-identical).
 
-    The opt-in ``pos_prune`` path keeps the pos-carrying stream (its
-    predicate needs per-position tags).
+    The opt-in ``pos_prune`` is a filter on the survivors' pos_key: its
+    predicate depends only on the n-gram's tags, so every occurrence of a
+    key is kept or dropped together and a kept key's freq is unchanged.
     """
-    if pos_prune is None:
-        bnds = (
-            "concat(array(0), "
-            "filter(sequence(1, size(pos)), i -> element_at(pos, i) = '.'), "
-            "array(size(tokens) + 1))"
-        )
-        segs = (
-            f"filter(transform(sequence(1, size(bnds) - 1), k -> "
-            f"slice(tokens, element_at(bnds, k) + 1, "
-            f"element_at(bnds, k + 1) - element_at(bnds, k) - 1)), "
-            f"s -> size(s) > 0)"
-        )
-        # Candidate generation is codegen-friendly on purpose: posexplode
-        # the segment to token rows, then emit the ≤max_len n-grams
-        # starting at each position as gated concat_ws(slice(...)) — all
-        # whole-stage-codegen expressions. The previous formulation
-        # (nested transform/flatten/array_join higher-order functions)
-        # evaluated INTERPRETED per sentence and allocated Catalyst
-        # objects per candidate; measured at 1M docs it was the pipeline's
-        # worst scaler (explode alone 21.7 s @8 cores, 1.07× speedup
-        # 8→32 — allocation-bound, not CPU-bound). This shape: 12.8 s @8
-        # and the full mine (explode + agg) 6.8 s @32 on the same input.
-        starts = [F.when(F.col("i") + k <= F.size("seg"),
-                         F.concat_ws(" ", F.slice("seg", F.col("i") + 1, k)))
-                  for k in range(1, int(max_len) + 1)]
-        cand = (
-            sentences
-            .filter(F.expr("size(tokens) > 0"))
-            .select(F.expr(bnds).alias("bnds"), "tokens")
-            .select(F.explode(F.expr(segs)).alias("seg"))
-            .select("seg", F.posexplode("seg").alias("i", "tok"))
-            .select(F.explode(F.array(*starts)).alias("ngram_key"))
-            .filter(F.col("ngram_key").isNotNull())
-        )
-    else:
-        gen_pos = F.expr(
-            f"""
-            flatten(transform(sequence(0, size(tokens)-1), i ->
-              transform(sequence(1, least({int(max_len)}, size(tokens)-i)), n ->
-                struct(array_join(slice(tokens, i+1, n), ' ') AS ngram_key,
-                       array_join(slice(pos, i+1, n), ' ') AS pos_key))))
-            """
-        )
-        cand = (
-            sentences
-            .select(F.explode(gen_pos).alias("g"))
-            .select("g.ngram_key", "g.pos_key")
-            .filter(F.expr("instr(concat(' ', pos_key, ' '), ' . ') = 0"))
-        )
-    if pos_prune is not None:
-        # P2 (pruneByPOSTag, frequent_pattern_mining.h:223-234; opt-in —
-        # ENABLE_POS_PRUNE is off by default in the reference). The
-        # reference prunes at every Apriori step: a unigram occurrence is
-        # dropped when its tag is forbidden as BOTH initial and expansion
-        # (:226), and an extension is dropped when the NEW token's tag is
-        # a forbidden expansion (:229, applied at frequent_pattern_mining.h
-        # :350-375 for every length). Net pattern-set semantics with a
-        # context-free tagger: a candidate survives iff its FIRST tag is
-        # not forbidden-as-both (patterns can never start at a pruned
-        # unigram occurrence) and NO tag after position 0 is a forbidden
-        # expansion. One scan-side predicate on the POS key, applied
-        # before the aggregation so pruned candidates never shuffle.
-        no_initial, no_expansion = pos_prune
-        both = sorted(set(no_initial) & set(no_expansion))
-        tags = F.split("pos_key", " ")
-        first_hit = (F.element_at(tags, 1).isin(*both)
-                     if both else F.lit(False))
-        tail_hit = (
-            F.exists(F.slice(tags, F.lit(2), F.size(tags)),
-                     lambda t: t.isin(*sorted(no_expansion)))
-            if no_expansion else F.lit(False))
-        cand = cand.filter(~(first_hit | tail_hit))
+    bnds = (
+        "concat(array(0), "
+        "filter(sequence(1, size(pos)), i -> element_at(pos, i) = '.'), "
+        "array(size(tokens) + 1))"
+    )
+    segs = (
+        f"filter(transform(sequence(1, size(bnds) - 1), k -> "
+        f"slice(tokens, element_at(bnds, k) + 1, "
+        f"element_at(bnds, k + 1) - element_at(bnds, k) - 1)), "
+        f"s -> size(s) > 0)"
+    )
+    # Candidate generation is codegen-friendly on purpose: posexplode
+    # the segment to token rows, then emit the ≤max_len n-grams
+    # starting at each position as gated concat_ws(slice(...)) — all
+    # whole-stage-codegen expressions. The previous formulation
+    # (nested transform/flatten/array_join higher-order functions)
+    # evaluated INTERPRETED per sentence and allocated Catalyst
+    # objects per candidate; measured at 1M docs it was the pipeline's
+    # worst scaler (explode alone 21.7 s @8 cores, 1.07× speedup
+    # 8→32 — allocation-bound, not CPU-bound). This shape: 12.8 s @8
+    # and the full mine (explode + agg) 6.8 s @32 on the same input.
+    starts = [F.when(F.col("i") + k <= F.size("seg"),
+                     F.concat_ws(" ", F.slice("seg", F.col("i") + 1, k)))
+              for k in range(1, int(max_len) + 1)]
     survivors = (
-        cand
+        sentences
+        .filter(F.expr("size(tokens) > 0"))
+        .select(F.expr(bnds).alias("bnds"), "tokens")
+        .select(F.explode(F.expr(segs)).alias("seg"))
+        .select("seg", F.posexplode("seg").alias("i", "tok"))
+        .select(F.explode(F.array(*starts)).alias("ngram_key"))
+        .filter(F.col("ngram_key").isNotNull())
         .groupBy("ngram_key")
         .agg(F.count(F.lit(1)).alias("freq"))
         .filter(F.col("freq") >= min_sup)
@@ -181,20 +145,39 @@ def mine_patterns(
     # directly is identical to any occurrence slice — and not carrying a
     # second string through the 6x-corpus aggregation (nor a min() string
     # buffer per key) nearly halves the stage's shuffle and hashmap cost.
-    return survivors.select(
+    patterns = survivors.select(
         F.split("ngram_key", " ").alias("ngram"),
         "freq",
         _pos_key_expr("ngram_key").alias("pos_key"),
         F.size(F.split("ngram_key", " ")).alias("n"),
         "ngram_key",
     )
+    if pos_prune is None:
+        return patterns
+    # P2 (pruneByPOSTag, frequent_pattern_mining.h:223-234; opt-in —
+    # ENABLE_POS_PRUNE is off by default in the reference). The reference
+    # prunes at every Apriori step: a unigram occurrence is dropped when
+    # its tag is forbidden as BOTH initial and expansion (:226), and an
+    # extension is dropped when the NEW token's tag is a forbidden
+    # expansion (:229, applied at frequent_pattern_mining.h:350-375 for
+    # every length). Net pattern-set semantics with a context-free tagger:
+    # a pattern survives iff its FIRST tag is not forbidden-as-both
+    # (patterns can never start at a pruned unigram occurrence) and NO tag
+    # after position 0 is a forbidden expansion.
+    no_initial, no_expansion = pos_prune
+    both = sorted(set(no_initial) & set(no_expansion))
+    tags = F.split("pos_key", " ")
+    first_hit = F.element_at(tags, 1).isin(*both)  # isin() of none: false
+    tail_hit = F.exists(F.slice(tags, F.lit(2), F.size(tags)),
+                        lambda t: t.isin(*sorted(no_expansion)))
+    return patterns.filter(~(first_hit | tail_hit))
 
 
 def boost_patterns(sentences: DataFrame, max_len: int = MAX_LEN) -> DataFrame:
     """M14 candidates: NP/DATE chunk spans (preprocessing.py:32-71 grammar,
     re-expressed in nlp.boost_chunk_spans). Output: (ngram, pos_key,
-    boost_freq) — the observed chunk frequency, later floored to MIN_SUP
-    on union.
+    boost_freq) — the observed chunk frequency; a chunk the mining
+    missed is floored to MIN_SUP by :func:`mine_patterns_boosted`.
 
     Reads the stage-1 ``chunk_a``/``chunk_b`` span columns, which
     corpus.sentences_from_pages computes inside the SAME python NLP pass
@@ -227,55 +210,31 @@ def boost_patterns(sentences: DataFrame, max_len: int = MAX_LEN) -> DataFrame:
 
 def mine_patterns_boosted(
     sentences: DataFrame, min_sup: int = MIN_SUP, max_len: int = MAX_LEN,
-    _persisted: list | None = None, eager: bool = True,
 ) -> DataFrame:
-    """M14 (frequent_pattern_mining.h:236-258 loadExternalPatterns): union
-    chunk-boost patterns into the mined table. A boost pattern already
-    mined keeps its true frequency; a new one (i.e. below min_sup) enters
-    with freq = min_sup exactly as the reference floors currentFreq to
-    MIN_SUP — this is what lets legitimate tail NP entities become
-    mentions. The anti-join's build side is the boost table (small);
-    Catalyst broadcasts it.
+    """M14 (frequent_pattern_mining.h:236-258 loadExternalPatterns): merge
+    chunk-boost patterns into the mined table with one full outer join on
+    ``ngram``, which reads each side once (so nothing is cached). A boost
+    pattern already mined keeps its true frequency; a new one (i.e. below
+    min_sup) enters with freq = min_sup exactly as the reference floors
+    currentFreq to MIN_SUP — this is what lets legitimate tail NP
+    entities become mentions.
 
-    The mined table feeds BOTH the union and the anti-join — without
-    materialization the full corpus explode-agg (the pipeline's most
-    expensive JVM stage) would execute twice, so the min_sup survivors
-    (bounded, ~100k rows at 1M docs) are persisted and forced once.
-    Callers that want to release that persist when the downstream stage
-    has materialized pass ``_persisted`` — the cached survivor table is
-    appended to it (run_pipeline unpersists after the patterns
-    checkpoint; ad-hoc callers may let it die with the session).
-
-    ``is_boost`` marks the externally-injected rows: the reference
-    zero-fills every occurrence-derived feature for external patterns
-    (id >= id2ends.size() guards in extractStatistical /
-    extractPunctuation, feature_extraction.h:210,255,394-400), so the
-    classifier needs to know which rows those are.
-
-    ``eager=False`` skips the persist + force — for callers that only
-    need the PLAN (e.g. run_pipeline deriving the checkpoint schema on a
-    resume hit, where the result is never executed)."""
-    from pyspark import StorageLevel
-
+    ``is_boost`` marks the externally-injected rows (no mined row for the
+    key): the reference zero-fills every occurrence-derived feature for
+    external patterns (id >= id2ends.size() guards in extractStatistical
+    / extractPunctuation, feature_extraction.h:210,255,394-400), so the
+    classifier needs to know which rows those are."""
     mined = mine_patterns(sentences, min_sup, max_len)
-    if eager:
-        mined = mined.persist(StorageLevel.MEMORY_AND_DISK)
-        mined.count()
-        if _persisted is not None:
-            _persisted.append(mined)
-    extra = (
-        boost_patterns(sentences, max_len)
-        .join(mined.select("ngram"), "ngram", "left_anti")
-        .select(
-            "ngram",
-            F.lit(min_sup).cast("long").alias("freq"),
-            "pos_key",
-            F.size("ngram").alias("n"),
-            F.array_join("ngram", " ").alias("ngram_key"),
-        )
+    boost = boost_patterns(sentences, max_len).select(
+        "ngram", F.col("pos_key").alias("boost_pos_key"))
+    return mined.join(boost, "ngram", "full_outer").select(
+        "ngram",
+        F.coalesce("freq", F.lit(min_sup).cast("long")).alias("freq"),
+        F.coalesce("pos_key", "boost_pos_key").alias("pos_key"),
+        F.coalesce("n", F.size("ngram")).alias("n"),
+        F.coalesce("ngram_key", F.array_join("ngram", " ")).alias("ngram_key"),
+        F.col("freq").isNull().alias("is_boost"),
     )
-    return (mined.withColumn("is_boost", F.lit(False))
-            .unionByName(extra.withColumn("is_boost", F.lit(True))))
 
 
 def idf(sentences: DataFrame) -> DataFrame:

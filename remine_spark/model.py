@@ -37,7 +37,7 @@ from collections import Counter
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from . import algo
 
@@ -303,7 +303,7 @@ def _em_pass(sentences: DataFrame, bc_model, deps_logprob: dict) -> DataFrame:
     return cols.mapInPandas(run, schema="key string, cnt long, energy double")
 
 
-def _em_stats(spark: SparkSession, sentences: DataFrame, model: SegModel,
+def _em_stats(sentences: DataFrame, model: SegModel,
               bc_model) -> tuple[dict, dict, float]:
     """(signature counts, chosen-pattern counts, total energy) in ONE Spark
     job: the task rows of ``_em_pass`` are collected and summed on the
@@ -326,7 +326,7 @@ def _em_stats(spark: SparkSession, sentences: DataFrame, model: SegModel,
 
 
 def adjust_constraints(
-    spark: SparkSession, sentences: DataFrame, model: SegModel, bc_model,
+    sentences: DataFrame, model: SegModel, bc_model,
     inner_iters: int = 10, rel_eps: float = EPS,
 ) -> list[float]:
     """Inner EM loop (main.cpp:187-198 + adjustConstraints
@@ -338,7 +338,7 @@ def adjust_constraints(
     energies: list[float] = []
     last = 1e100
     for _ in range(inner_iters):
-        cnts, _pat, energy = _em_stats(spark, sentences, model, bc_model)
+        cnts, _pat, energy = _em_stats(sentences, model, bc_model)
         model.deps_prob = {
             s: cnts.get(s, 0) / t
             for s, t in model.tree_total.items() if t > 0
@@ -351,13 +351,13 @@ def adjust_constraints(
 
 
 def rectify_frequency(
-    spark: SparkSession, sentences: DataFrame, model: SegModel, bc_model,
+    sentences: DataFrame, model: SegModel, bc_model,
 ) -> SegModel:
     """A8 (rectifyFrequencyDeps, segmentation.h:816-882): pattern freq :=
     number of times Viterbi chose it; then rebuild trie/probs (patterns with
     rectified freq 0 drop out of the trie for multi-word, segmentation.h:46).
     """
-    _sig, cnt, _energy = _em_stats(spark, sentences, model, bc_model)
+    _sig, cnt, _energy = _em_stats(sentences, model, bc_model)
     new_patterns = [
         (toks, cnt.get(pid, 0), q, ind)
         for pid, (toks, _f, q, ind) in enumerate(model.patterns)

@@ -129,7 +129,8 @@ def checkpoint(spark: SparkSession, workdir: str, stage: str, df: DataFrame,
                resume: bool = True, partition_cols: list[str] | None = None
                ) -> DataFrame:
     """Write-or-reuse a stage checkpoint; returns the re-read DataFrame (so
-    downstream plans cut lineage at the materialized table)."""
+    downstream plans cut lineage at the materialized table). On reuse
+    ``df`` is never executed: only its schema is read."""
     path = os.path.join(workdir, stage)
     if not (resume and _exists(path)):
         t0 = time.time()
@@ -250,53 +251,38 @@ def run_pipeline(
         spark, workdir, "sentences", sentences_from_pages(pages), resume)
     _mark("sentences")
 
-    # 2. patterns (A1/A2 + M14 chunk boost + M3/M5 quality)
-    pat_path = os.path.join(workdir, "patterns")
-    if resume and _exists(pat_path):
-        # resume hit: derive the checkpoint schema from the (never
-        # executed) plan and read — skipping the eager survivor persist
-        # and feature passes that used to run even when their result was
-        # discarded. Both quality sources emit the same net schema: the
-        # raw pattern columns + (indicator, quality).
-        from pyspark.sql import types as T
+    # 2. patterns (A1/A2 + M14 chunk boost + M3/M5 quality): one lazy
+    # plan that the checkpoint writes or, on a resume hit, only reads with
+    # this plan's schema (both quality sources emit the same net columns:
+    # the raw pattern columns + (indicator, quality))
+    raw_patterns = mining.mine_patterns_boosted(sentences, min_sup, max_len)
+    scored_patterns = model_mod.assign_quality(raw_patterns)
+    stage_caches: list[DataFrame] = []
+    if quality_pools is not None and not (
+            resume and _exists(os.path.join(workdir, "patterns"))):
+        from remine_spark import classifier
 
-        raw_schema = mining.mine_patterns_boosted(
-            sentences, min_sup, max_len, eager=False).schema
-        pat_schema = T.StructType(
-            list(raw_schema.fields)
-            + [T.StructField("indicator", T.StringType()),
-               T.StructField("quality", T.DoubleType())])
-        patterns_df = _read_wide(spark, pat_path, schema=pat_schema)
-    else:
-        stage_caches: list[DataFrame] = []
-        raw_patterns = mining.mine_patterns_boosted(
-            sentences, min_sup, max_len, _persisted=stage_caches)
-        if quality_pools is not None:
-            from remine_spark import classifier
-
-            # ONE corpus-context feature pass (occurrence explode +
-            # semi-join + outside-idf window) shared by the forest fit AND
-            # the scoring pass — each used to featurize independently,
-            # doubling the dominant cost of this stage
-            cfeats = classifier.corpus_features(
-                raw_patterns, sentences, max_len)
-            stage_caches.append(cfeats)
-            feats = classifier.featurize(raw_patterns, corpus_feats=cfeats)
-            rf, asm = classifier.fit_quality_forest(
-                raw_patterns, quality_pools[0], quality_pools[1],
-                prefeaturized=feats)
-            scored_patterns = classifier.assign_quality_ml(
-                raw_patterns, rf, asm, prefeaturized=feats)
-        else:
-            scored_patterns = model_mod.assign_quality(raw_patterns)
-        patterns_df = checkpoint(
-            spark, workdir, "patterns", scored_patterns, resume)
-        # the checkpoint has materialized everything derived from the
-        # mined survivors and the corpus feature table — release their
-        # block-manager storage (they otherwise accumulate across runs in
-        # one session)
-        for df in stage_caches:
-            df.unpersist()
+        # the mined table feeds the corpus feature pass, the forest fit and
+        # the scoring write: persist it so the corpus explode-agg runs once
+        raw_patterns = raw_patterns.persist()
+        # ONE corpus-context feature pass (occurrence explode + semi-join
+        # + outside-idf window), the stage's dominant cost, shared by the
+        # forest fit AND the scoring pass
+        cfeats = classifier.corpus_features(raw_patterns, sentences, max_len)
+        stage_caches += [raw_patterns, cfeats]
+        feats = classifier.featurize(raw_patterns, corpus_feats=cfeats)
+        rf, asm = classifier.fit_quality_forest(
+            raw_patterns, quality_pools[0], quality_pools[1],
+            prefeaturized=feats)
+        scored_patterns = classifier.assign_quality_ml(
+            raw_patterns, rf, asm, prefeaturized=feats)
+    patterns_df = checkpoint(
+        spark, workdir, "patterns", scored_patterns, resume)
+    # the checkpoint has materialized everything derived from the mined
+    # table and the corpus feature table — release their block-manager
+    # storage (they otherwise accumulate across runs in one session)
+    for df in stage_caches:
+        df.unpersist()
     _mark("patterns")
 
     # 3. ReMine-Local fit (A6/A7/A8 + M9)
@@ -325,10 +311,10 @@ def run_pipeline(
             # task closure (see model._em_pass)
             bc_model = spark.sparkContext.broadcast(m.payload())
             try:
-                model_mod.adjust_constraints(spark, sentences, m,
+                model_mod.adjust_constraints(sentences, m,
                                              inner_iters=inner_iters,
                                              bc_model=bc_model)
-                m = model_mod.rectify_frequency(spark, sentences, m,
+                m = model_mod.rectify_frequency(sentences, m,
                                                 bc_model=bc_model)
             finally:
                 bc_model.destroy()

@@ -61,6 +61,34 @@ def test_sub_minsup_chunk_floored_to_minsup(spark):
     assert all(f >= 10 for f in got.values())
 
 
+def test_mining_plan_runs_no_job(spark):
+    """The patterns stage is one lazy plan: building the scored, boosted
+    table runs no Spark job (the pipeline's checkpoint write is its only
+    action), and the corpus explode appears once in it, with no cache."""
+    import uuid
+
+    from remine_spark import model as model_mod
+
+    rows = [(i, 0, ["stark", "wayne", "visited", "gotham", "."],
+             ["NNP", "NNP", "VBD", "NNP", "."]) for i in range(3)]
+    sents = _sents(spark, rows)
+    sc = spark.sparkContext
+    group = f"mining-plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        pats = model_mod.assign_quality(
+            mining.mine_patterns_boosted(sents, min_sup=10, max_len=6))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert pats.columns == ["ngram", "freq", "pos_key", "n", "ngram_key",
+                            "is_boost", "indicator", "quality"]
+    plan = pats._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("posexplode") == 1
+    assert "InMemoryRelation" not in plan
+
+
 def test_boost_pattern_becomes_mention_end_to_end(spark, tmp_path):
     """The recall story: a tail two-token NNP entity below MIN_SUP becomes
     a mention only through the boost path."""

@@ -67,10 +67,12 @@ def test_multiword_entities_scored_ep(fitted):
     assert len(ep) / len(hits) >= 0.9
 
 
-def test_pipeline_with_ml_quality_passes_parity(spark, tmp_path):
+def test_pipeline_with_ml_quality_passes_parity(spark, tmp_path,
+                                                 monkeypatch):
     """End-to-end with the RF quality source: the mirror-parity gate is
     quality-source-agnostic (the mirror consumes the same fitted payload),
-    so the distributed run must still match it at ≥0.95."""
+    so the distributed run must still match it at ≥0.95. A resumed run
+    re-reads the patterns checkpoint without refitting the forest."""
     from remine_spark import eval as ev, pipeline
 
     docs = synth.generate_docs(120, seed=42)
@@ -85,3 +87,17 @@ def test_pipeline_with_ml_quality_passes_parity(spark, tmp_path):
     p, r, _ = ev.precision_recall(got, mirror)
     assert p >= 0.95 and r >= 0.95, f"P={p} R={r}"
     assert got  # non-degenerate
+
+    def no_refit(*_a, **_kw):
+        raise AssertionError("quality forest refit on a resume hit")
+
+    def rows(df):
+        return sorted((r.asDict() for r in df.collect()),
+                      key=lambda d: d["ngram_key"])
+
+    first = rows(out["patterns"])
+    monkeypatch.setattr(classifier, "fit_quality_forest", no_refit)
+    again = pipeline.run_pipeline(
+        spark, pages, str(tmp_path / "wd"), inner_iters=2, transe_epochs=3,
+        resume=True, quality_pools=(ents, rels))
+    assert rows(again["patterns"]) == first

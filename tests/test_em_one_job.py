@@ -46,13 +46,13 @@ def test_census_and_em_pass_run_one_job_each(spark, fitted):
     assert census == m.tree_total
     assert n_census == 1
     (sigs, pats, energy), n_em = _jobs_of(
-        spark, lambda: model_mod._em_stats(spark, sentences, m, bc))
+        spark, lambda: model_mod._em_stats(sentences, m, bc))
     assert sigs and pats and energy < 0
     assert n_em == 1
 
 
 def test_em_counts_partition_invariant(spark, fitted):
     sentences, m, bc = fitted
-    got = [model_mod._em_stats(spark, sentences.repartition(n), m, bc)[:2]
+    got = [model_mod._em_stats(sentences.repartition(n), m, bc)[:2]
            for n in (3, 17)]
     assert got[0] == got[1]

@@ -46,11 +46,11 @@ def test_em_outer_iteration_resume_identical(spark, tmp_path):
     orig = model_mod.rectify_frequency
     calls = {"n": 0}
 
-    def bomb(spark_, sentences, m, **kw):
+    def bomb(sentences, m, **kw):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("simulated mid-fit kill")
-        return orig(spark_, sentences, m, **kw)
+        return orig(sentences, m, **kw)
 
     model_mod.rectify_frequency = bomb
     try:

@@ -18,12 +18,12 @@ def _sents(spark):
 
 def test_pos_prune_drops_any_noninitial_expansion(spark):
     sents = _sents(spark)
-    base = {r.ngram_key for r in
+    base = {r.ngram_key: r.freq for r in
             mining.mine_patterns(sents, min_sup=2, max_len=3).collect()}
     assert "globex in" in base and "in" in base
     assert "globex in gotham" in base
 
-    pruned = {r.ngram_key for r in mining.mine_patterns(
+    pruned = {r.ngram_key: r.freq for r in mining.mine_patterns(
         sents, min_sup=2, max_len=3,
         pos_prune=(set(), {"IN"})).collect()}
     # any multi-gram with IN at a non-initial position is gone — trailing
@@ -39,10 +39,15 @@ def test_pos_prune_drops_any_noninitial_expansion(spark):
     assert "in gotham" in pruned
     assert "acme acquired" in pruned
 
-    both = {r.ngram_key for r in mining.mine_patterns(
+    both = {r.ngram_key: r.freq for r in mining.mine_patterns(
         sents, min_sup=2, max_len=3,
         pos_prune=({"IN"}, {"IN"})).collect()}
     # forbidden-as-both: the unigram occurrence is pruned, so neither the
     # unigram nor anything starting at it survives
     assert "in" not in both
     assert "in gotham" not in both
+    # the prune keeps or drops every occurrence of a key together (its
+    # predicate reads only the key's tags), so a kept key's freq is the
+    # unpruned one
+    for kept in (pruned, both):
+        assert kept and all(f == base[k] for k, f in kept.items())

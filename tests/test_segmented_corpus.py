@@ -36,5 +36,5 @@ def test_segment_sentences_spans_and_em_pass_agree(spark, tmp_path):
         .groupBy(F.col("s.pattern_id").alias("pid"))
         .agg(F.count(F.lit(1)).alias("cnt")).collect())
     want = {int(r.pid): int(r.cnt) for r in chosen_full}
-    _sig, got, _e = model_mod._em_stats(spark, sentences, m, bc)
+    _sig, got, _e = model_mod._em_stats(sentences, m, bc)
     assert got == want
