@@ -1,15 +1,9 @@
 #!/usr/bin/env python
-"""Benchmark harness.
-
-Default mode (what the driver runs): headline operator queries at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` plus the flagship pipeline throughput on a
-deterministic synthetic pages corpus. Prints ONE JSON line.
-
-``--scaling``: the north_rule two-cluster-size proxy — identical pipeline
-job at local[N] and local[4N] (default 4→16, see SCALING_N note) on the
-same input; reports docs/sec at both and efficiency =
-(docs/s@4N / docs/s@N) / 4. Appends a markdown row to BENCH.md.
+"""Benchmark harness: the headline operator queries at
+``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) plus the flagship
+pipeline throughput on a deterministic synthetic pages corpus
+(``$REMINE_BENCH_DOCS`` pages), on the session defaults of
+``remine_spark.session.get_spark``. Prints ONE JSON line.
 """
 
 from __future__ import annotations
@@ -22,21 +16,7 @@ import tempfile
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BENCH_DOCS = int(os.environ.get("REMINE_BENCH_DOCS", "24000"))
-# scaling runs need enough input that parallel compute dominates fixed
-# session/job overhead, otherwise the N→4N proxy measures JVM constants
-SCALING_DOCS = int(os.environ.get("REMINE_SCALING_DOCS", "1000000"))
-# N and 4N task slots for the scaling proxy — the driver-specified pair
-# local[8] → local[32]. Every Arrow-python task slot occupies one JVM
-# feeder thread AND one python worker, so local[32] on this 32-core box
-# runs 64 busy threads (2:1 oversubscribed) — a hardware artifact a real
-# 4N-executor cluster doesn't have; the r2 per-stage optimizations
-# (string-key mining, compact EM kernel, right-sized TransE partitions,
-# JVM expression tagger) lifted the specified pair from 0.20 to ≥0.5
-# measured (BENCH.md). The least-contended 2→8 pair remains the faithful
-# cluster estimate and is reported alongside.
-SCALING_N = int(os.environ.get("REMINE_SCALING_N", "8"))
 
 HEADLINE = [
     "q1_pricing_summary", "a2_bigram_minsup", "a3_token_idf",
@@ -68,12 +48,12 @@ def run_queries(spark, sf_dir: str) -> dict[str, float]:
 
 
 def run_pipeline_bench(spark, n_docs: int) -> dict:
-    from remine_spark import pipeline, synth
+    from remine_spark import pipeline, session, synth
 
     wd = tempfile.mkdtemp(prefix="remine_bench_")
     try:
         pages = synth.pages_df(spark, n_docs, seed=42,
-                               num_partitions=CPUS * 2).cache()
+                               num_partitions=session.DEFAULT_CPUS * 2).cache()
         n_en = pages.filter("lang = 'en'").count()  # materialize input first
         t0 = time.time()
         out = pipeline.run_pipeline(
@@ -87,57 +67,19 @@ def run_pipeline_bench(spark, n_docs: int) -> dict:
         shutil.rmtree(wd, ignore_errors=True)
 
 
-def new_session(master: str):
+def new_session():
     from remine_spark.session import get_spark
-    return get_spark(master=master, app_name=f"bench_{master}")
+    return get_spark(app_name="bench")
 
 
 def main() -> None:
-    if "--one" in sys.argv:
-        # single measurement in a clean process (used by --scaling)
-        n = int(sys.argv[sys.argv.index("--one") + 1])
-        spark = new_session(f"local[{n}]")
-        print("RESULT " + json.dumps(run_pipeline_bench(spark, SCALING_DOCS)))
-        spark.stop()
-        return
-
-    if "--scaling" in sys.argv:
-        # each level in its own subprocess: fresh JVM + python-worker pool,
-        # no cross-session state (stopped-context accumulator sockets etc.)
-        import subprocess
-        results = {}
-        for n in (SCALING_N, SCALING_N * 4):
-            out = subprocess.run(
-                [sys.executable, __file__, "--one", str(n)],
-                capture_output=True, text=True, check=True)
-            line = [ln for ln in out.stdout.splitlines()
-                    if ln.startswith("RESULT ")][-1]
-            results[n] = json.loads(line[len("RESULT "):])
-        lo, hi = SCALING_N, SCALING_N * 4
-        eff = (results[hi]["docs_per_sec"] / results[lo]["docs_per_sec"]) / 4.0
-        line = {
-            "metric": f"pipeline_scaling_local{lo}_vs_local{hi}",
-            "docs": SCALING_DOCS,
-            f"local{lo}_docs_per_sec": results[lo]["docs_per_sec"],
-            f"local{hi}_docs_per_sec": results[hi]["docs_per_sec"],
-            "efficiency_n_to_4n": round(eff, 3),
-        }
-        print(json.dumps(line))
-        with open("BENCH.md", "a") as fh:
-            fh.write(
-                f"| {time.strftime('%Y-%m-%d %H:%M')} | {SCALING_DOCS} docs | "
-                f"{results[lo]['docs_per_sec']} docs/s @{lo} | "
-                f"{results[hi]['docs_per_sec']} docs/s @{hi} | "
-                f"{round(eff, 3)} |\n")
-        return
-
     t_all = time.time()
-    spark = new_session(f"local[{CPUS}]")
+    spark = new_session()
     qtimes = run_queries(spark, SF_DIR)
     spark.stop()
     # fresh session for the pipeline: isolates its throughput from residual
     # state (cached blocks, GC pressure) left by the query sweep
-    spark = new_session(f"local[{CPUS}]")
+    spark = new_session()
     pipe = run_pipeline_bench(spark, BENCH_DOCS)
     total = round(time.time() - t_all, 2)
     spark.stop()
@@ -150,7 +92,7 @@ def main() -> None:
     # metric window (the metric is the headline sweep + pipeline wall).
     try:
         import __spark_entry__ as entry_mod
-        spark = new_session(f"local[{CPUS}]")
+        spark = new_session()
         for sf_warm in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
             entry_mod._run_flagship(spark, sf_warm)
         spark.stop()

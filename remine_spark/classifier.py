@@ -378,23 +378,18 @@ CORPUS_FEATURES = [
 ]
 
 
-def featurize(patterns: DataFrame, sentences: DataFrame | None = None,
-              max_len: int = 6,
-              corpus_feats: DataFrame | None = None) -> DataFrame:
+def featurize(patterns: DataFrame, corpus_feats: DataFrame) -> DataFrame:
     """M1/M2: the engineered per-pattern feature table.
 
     Pattern-local families (frequency, length, POS-group ratios
     feature_extraction.h:123-137, stopword flags/ratio :184-205) are pure
-    column expressions; when ``sentences`` is provided the corpus-context
-    families (punctuation, completeness, statistical, outside-idf,
-    independence — see :func:`corpus_features`) are joined in, giving the
-    reference's full 25-multi-word / 20-unigram coverage. Without a corpus
-    the context features are zero-filled (shape-compatible).
-
-    ``corpus_feats``: a precomputed :func:`corpus_features` table — pass
-    it when BOTH the forest fit and the scoring pass featurize the same
-    patterns, so the corpus-scale occurrence explode runs once, not once
-    per consumer (run_pipeline does this)."""
+    column expressions; the corpus-context families (punctuation,
+    completeness, statistical, outside-idf, independence) come from
+    ``corpus_feats``, the :func:`corpus_features` table of the same
+    patterns, joined on ``ngram_key``: the reference's full 25-multi-word /
+    20-unigram coverage. The result is the one table that both
+    :func:`fit_quality_forest` and :func:`assign_quality_ml` take, so the
+    corpus-scale occurrence explode runs once per pipeline."""
     tags = F.split("pos_key", " ")
     toks = F.col("ngram")
     nf = F.size(F.filter(tags, lambda t: t.rlike(_NOUN))) / F.size(tags)
@@ -428,13 +423,6 @@ def featurize(patterns: DataFrame, sentences: DataFrame | None = None,
            / F.size(tags)).alias(f"f_pos_{grp.lower()}")
           for grp in POS_GROUPS],
     )
-    if corpus_feats is None and sentences is None:
-        for c in CORPUS_FEATURES:
-            default = 1.0 if c == "f_complete_sub" else 0.0
-            base = base.withColumn(c, F.lit(default))
-        return base
-    if corpus_feats is None:
-        corpus_feats = corpus_features(patterns, sentences, max_len)
     return base.join(corpus_feats, "ngram_key", "left").fillna(
         {c: 0.0 for c in CORPUS_FEATURES})
 
@@ -448,10 +436,9 @@ FEATURES = (
 )
 
 
-def fit_quality_forest(patterns: DataFrame, ent_pool: set[str],
+def fit_quality_forest(feats: DataFrame, ent_pool: set[str],
                        rel_pool: set[str], num_trees: int = 100,
-                       seed: int = 42, sentences: DataFrame | None = None,
-                       prefeaturized: DataFrame | None = None):
+                       seed: int = 42):
     """M4 (random_forest.h:108-290 contract): seeded pyspark.ml
     RandomForests on DPDN-labeled, featurized patterns — TWO forests like
     the reference (predict_quality.h trains the multi-word classifier on
@@ -459,19 +446,15 @@ def fit_quality_forest(patterns: DataFrame, ent_pool: set[str],
     20-feature family), falling back to one shared forest when a split
     has no rows. 100 trees (not the reference's 1000 — its forest is
     extremely-randomized with 4 feature × 4 split candidates, so trees
-    are individually much weaker). Pass the ``sentences`` table to train
-    on the full corpus-context feature families — or ``prefeaturized``
-    (an already-featurized table, shared with :func:`assign_quality_ml`)
-    so the corpus-scale feature pass runs once per pipeline."""
+    are individually much weaker). ``feats`` is the :func:`featurize`
+    table, the same one :func:`assign_quality_ml` scores."""
     from pyspark.ml.classification import RandomForestClassifier
     from pyspark.ml.feature import VectorAssembler
 
-    feats_src = (prefeaturized if prefeaturized is not None
-                 else featurize(patterns, sentences=sentences))
     # label_patterns only adds the label column, so featurize-then-label
     # ≡ label-then-featurize — and the former lets both consumers share
     # one featurized table
-    labeled = label_patterns(feats_src, ent_pool, rel_pool).cache()
+    labeled = label_patterns(feats, ent_pool, rel_pool).cache()
     asm = VectorAssembler(inputCols=FEATURES, outputCol="features")
 
     def train_on(df):
@@ -491,24 +474,19 @@ def fit_quality_forest(patterns: DataFrame, ent_pool: set[str],
         labeled.unpersist()
 
 
-def assign_quality_ml(patterns: DataFrame, rf_model, assembler,
-                      sentences: DataFrame | None = None,
-                      prefeaturized: DataFrame | None = None) -> DataFrame:
+def assign_quality_ml(feats: DataFrame, rf_model, assembler) -> DataFrame:
     """M5 (predict_quality.h:12-82): indicator = argmax class, quality =
     probability of that class; unigram POS overrides verbatim
     (predict_quality.h:143-155). Multi-word rows score through the
     multi-word forest, unigram rows through the unigram forest (the
     reference's two-classifier split); ``rf_model`` is the
     ``{"multi": ..., "uni": ...}`` dict that :func:`fit_quality_forest`
-    returns. Scoring is JVM-side (pyspark.ml
-    broadcast models), no python in the loop. ``sentences`` (or the
-    shared ``prefeaturized`` table) must match what
-    :func:`fit_quality_forest` saw (same featurization)."""
+    returns. Scoring is JVM-side (pyspark.ml broadcast models), no python
+    in the loop. ``feats`` is the :func:`featurize` table the forests were
+    fit on; the output is its pattern columns + (indicator, quality)."""
     from pyspark.ml.functions import vector_to_array
 
-    base = (prefeaturized if prefeaturized is not None
-            else featurize(patterns, sentences=sentences))
-    feats = assembler.transform(base)
+    feats = assembler.transform(feats)
     scored = (
         rf_model["multi"].transform(feats.filter(F.col("n") > 1))
         .unionByName(rf_model["uni"].transform(feats.filter(F.col("n") == 1)))

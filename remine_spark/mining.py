@@ -175,9 +175,10 @@ def mine_patterns(
 
 def boost_patterns(sentences: DataFrame, max_len: int = MAX_LEN) -> DataFrame:
     """M14 candidates: NP/DATE chunk spans (preprocessing.py:32-71 grammar,
-    re-expressed in nlp.boost_chunk_spans). Output: (ngram, pos_key,
-    boost_freq) — the observed chunk frequency; a chunk the mining
-    missed is floored to MIN_SUP by :func:`mine_patterns_boosted`.
+    re-expressed in nlp.boost_chunk_spans). Output: (ngram_key, boost_freq,
+    pos_key) — the observed chunk frequency of each space-joined surface;
+    a chunk the mining missed is floored to MIN_SUP by
+    :func:`mine_patterns_boosted`.
 
     Reads the stage-1 ``chunk_a``/``chunk_b`` span columns, which
     corpus.sentences_from_pages computes inside the SAME python NLP pass
@@ -195,15 +196,14 @@ def boost_patterns(sentences: DataFrame, max_len: int = MAX_LEN) -> DataFrame:
                 F.col("s.chunk_b").alias("b"))
         .filter(F.col("b") - F.col("a") <= max_len)
         .select(
-            F.expr("slice(tokens, a + 1, b - a)").alias("ngram"),
+            F.concat_ws(" ", F.expr("slice(tokens, a + 1, b - a)"))
+            .alias("ngram_key"),
             F.concat_ws(" ", F.expr("slice(pos, a + 1, b - a)"))
             .alias("pos_key"))
-        .withColumn("surf", F.concat_ws(" ", "ngram"))
-        .filter(~F.col("surf").contains("www")
-                & ~F.col("surf").contains(".com"))
-        .drop("surf")
+        .filter(~F.col("ngram_key").contains("www")
+                & ~F.col("ngram_key").contains(".com"))
     )
-    return spans.groupBy("ngram").agg(
+    return spans.groupBy("ngram_key").agg(
         F.count(F.lit(1)).alias("boost_freq"),
         F.min("pos_key").alias("pos_key"))
 
@@ -213,7 +213,9 @@ def mine_patterns_boosted(
 ) -> DataFrame:
     """M14 (frequent_pattern_mining.h:236-258 loadExternalPatterns): merge
     chunk-boost patterns into the mined table with one full outer join on
-    ``ngram``, which reads each side once (so nothing is cached). A boost
+    ``ngram_key``, which reads each side once (so nothing is cached). Both
+    sides leave their aggregation hash-partitioned by that key, so the
+    join adds no shuffle of its own. A boost
     pattern already mined keeps its true frequency; a new one (i.e. below
     min_sup) enters with freq = min_sup exactly as the reference floors
     currentFreq to MIN_SUP — this is what lets legitimate tail NP
@@ -226,13 +228,14 @@ def mine_patterns_boosted(
     classifier needs to know which rows those are."""
     mined = mine_patterns(sentences, min_sup, max_len)
     boost = boost_patterns(sentences, max_len).select(
-        "ngram", F.col("pos_key").alias("boost_pos_key"))
-    return mined.join(boost, "ngram", "full_outer").select(
-        "ngram",
+        "ngram_key", F.col("pos_key").alias("boost_pos_key"))
+    ngram = F.coalesce("ngram", F.split("ngram_key", " "))
+    return mined.join(boost, "ngram_key", "full_outer").select(
+        ngram.alias("ngram"),
         F.coalesce("freq", F.lit(min_sup).cast("long")).alias("freq"),
         F.coalesce("pos_key", "boost_pos_key").alias("pos_key"),
-        F.coalesce("n", F.size("ngram")).alias("n"),
-        F.coalesce("ngram_key", F.array_join("ngram", " ")).alias("ngram_key"),
+        F.coalesce("n", F.size(ngram)).alias("n"),
+        "ngram_key",
         F.col("freq").isNull().alias("is_boost"),
     )
 

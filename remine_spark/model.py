@@ -189,63 +189,6 @@ def subtree_census(sentences: DataFrame, max_len: int = 6) -> dict[str, int]:
 
 
 # --------------------------------------------------------------------------
-# M7/M8: segmentation pass as a mapInPandas over sentence batches
-# --------------------------------------------------------------------------
-
-SEGMENTS_SCHEMA = (
-    "url string, doc_id long, sent_id int, "
-    "segments array<struct<start:int,end:int,pattern_id:int,ok:boolean>>, "
-    "sigs array<string>, energy double"
-)
-
-
-def segment_sentences(sentences: DataFrame, bc_model, rp_only: bool = False) -> DataFrame:
-    """One Viterbi pass over the corpus. ``bc_model`` is a broadcast of
-    SegModel.payload(). Emits chosen segments, the subtree signatures of
-    chosen multi-word segments (EM statistics, adjustConstraints
-    segmentation.h:917-926), and the sentence energy."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = bc_model.value
-        trie, prob = m["trie"], m["prob"]
-        patterns = m["patterns"]
-        dlp, dflt = m["deps_logprob"], m["default_logprob"]
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("url", "doc_id", "sent_id", "segments", "sigs", "energy")}
-            for url, did, sid, toks, heads in zip(
-                pdf["url"], pdf["doc_id"], pdf["sent_id"],
-                pdf["tokens"], pdf["dep_head"],
-            ):
-                toks = list(toks)
-                deps = [(i, int(h)) for i, h in enumerate(heads)]
-                segs, energy = algo.segment_sentence(
-                    toks, deps, trie, patterns, prob, dlp, dflt,
-                    rp_only=rp_only,
-                )
-                sigs = [
-                    algo.tree_signature(deps, s, e)
-                    for (s, e, pid, _ok) in segs
-                    if pid >= 0 and e - s > 1
-                ]
-                out["url"].append(url)
-                out["doc_id"].append(did)
-                out["sent_id"].append(sid)
-                out["segments"].append(
-                    [(int(s), int(e), int(pid), bool(ok))
-                     for (s, e, pid, ok) in segs])
-                out["sigs"].append(sigs)
-                out["energy"].append(float(energy) if energy > -1e80 else 0.0)
-            if out["url"]:
-                yield pd.DataFrame(
-                    {k: pd.Series(v, dtype=object) for k, v in out.items()}
-                )
-
-    cols = sentences.select("url", "doc_id", "sent_id", "tokens", "dep_head")
-    return cols.mapInPandas(run, schema=SEGMENTS_SCHEMA)
-
-
-# --------------------------------------------------------------------------
 # M9 + A7/A8: EM passes (driven by pipeline.run_pipeline)
 # --------------------------------------------------------------------------
 

@@ -427,33 +427,3 @@ def ann_ivf_topk(spark, sf_dir):
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("cand_id"))
     return s.withColumn("rnk", F.row_number().over(w)).filter(
         F.col("rnk") <= TOPK_LSH)
-
-
-def ann_ivf_topk_trained(spark, sf_dir):
-    """The in-session-trained IVF variant (pyspark.ml KMeans at query
-    time) — kept for environments where retraining the quantizer inline
-    is wanted; the registered ann_ivf_topk uses this model's centroids
-    frozen as literals. Not catalog-registered: a live KMeans fit is not
-    SQL-expressible for the oracle."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import Window, functions as F
-
-    emb = table(spark, sf_dir, "embeddings")
-    feat = emb.select("vec_id", F.expr(_V_SPARK).alias("v"),
-                      array_to_vector(F.col("embedding")).alias("features"))
-    km = KMeans(k=16, seed=42, maxIter=20, featuresCol="features")
-    model = km.fit(feat)
-    assigned = model.transform(feat).select(
-        "vec_id", "v", F.col("prediction").alias("cell"))
-    q = assigned.filter("vec_id < 10").select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), "cell")
-    s = (
-        assigned.join(F.broadcast(q), "cell")
-        .filter("vec_id <> q_id")
-        .select("q_id", F.col("vec_id").alias("cand_id"),
-                F.expr(_DOT_SPARK).alias("cos"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("cand_id"))
-    return s.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= TOPK_LSH)

@@ -270,12 +270,10 @@ def run_pipeline(
         # forest fit AND the scoring pass
         cfeats = classifier.corpus_features(raw_patterns, sentences, max_len)
         stage_caches += [raw_patterns, cfeats]
-        feats = classifier.featurize(raw_patterns, corpus_feats=cfeats)
+        feats = classifier.featurize(raw_patterns, cfeats)
         rf, asm = classifier.fit_quality_forest(
-            raw_patterns, quality_pools[0], quality_pools[1],
-            prefeaturized=feats)
-        scored_patterns = classifier.assign_quality_ml(
-            raw_patterns, rf, asm, prefeaturized=feats)
+            feats, quality_pools[0], quality_pools[1])
+        scored_patterns = classifier.assign_quality_ml(feats, rf, asm)
     patterns_df = checkpoint(
         spark, workdir, "patterns", scored_patterns, resume)
     # the checkpoint has materialized everything derived from the mined

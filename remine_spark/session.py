@@ -46,8 +46,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``; pass ``local[8]`` etc.
-    for the two-parallelism scaling benchmark.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (the host's core
+    count when unset); pass one to pin the parallelism, e.g. ``local[4]``.
     """
     # under spark-submit (PythonRunner pre-creates the py4j gateway and sets
     # PYSPARK_GATEWAY_PORT) the cluster master comes from the submit command;

@@ -64,7 +64,11 @@ def test_sub_minsup_chunk_floored_to_minsup(spark):
 def test_mining_plan_runs_no_job(spark):
     """The patterns stage is one lazy plan: building the scored, boosted
     table runs no Spark job (the pipeline's checkpoint write is its only
-    action), and the corpus explode appears once in it, with no cache."""
+    action), and the corpus explode appears once in it, with no cache.
+    Both sides of the boost join are aggregated by ``ngram_key`` and the
+    join reuses that partitioning: two hash exchanges, none on the
+    ``ngram`` array."""
+    import re
     import uuid
 
     from remine_spark import model as model_mod
@@ -87,6 +91,9 @@ def test_mining_plan_runs_no_job(spark):
     plan = pats._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("posexplode") == 1
     assert "InMemoryRelation" not in plan
+    executed = pats._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning(ngram#" not in executed
+    assert len(re.findall(r"Exchange hashpartitioning\(", executed)) == 2
 
 
 def test_boost_pattern_becomes_mention_end_to_end(spark, tmp_path):
@@ -177,7 +184,8 @@ def test_boost_rows_zero_fill_corpus_features(spark):
              .withColumn("case_mask", F.expr("transform(tokens, t -> 0)"))
              .withColumn("dep_head", F.expr("transform(tokens, t -> 0)")))
     pats = mining.mine_patterns_boosted(sents, min_sup=10, max_len=6)
-    feats = classifier.featurize(pats, sentences=sents)
+    feats = classifier.featurize(
+        pats, classifier.corpus_features(pats, sents))
     by_key = {r["ngram_key"]: r for r in feats.collect()}
 
     boost = by_key["stark wayne"]

@@ -16,10 +16,10 @@ def fitted(spark):
     patterns = mining.mine_patterns(sentences).cache()
     docs = synth.generate_docs(N_DOCS, seed=42)
     ents, rels = classifier.distant_pools(synth.analytic_gold(docs))
-    rf, asm = classifier.fit_quality_forest(patterns, ents, rels,
-                                            sentences=sentences)
-    scored = classifier.assign_quality_ml(patterns, rf, asm,
-                                          sentences=sentences).cache()
+    feats = classifier.featurize(
+        patterns, classifier.corpus_features(patterns, sentences))
+    rf, asm = classifier.fit_quality_forest(feats, ents, rels)
+    scored = classifier.assign_quality_ml(feats, rf, asm).cache()
     return patterns, ents, rels, scored
 
 

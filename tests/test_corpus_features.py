@@ -78,7 +78,8 @@ def test_outside_idf_counts_window_tokens(spark):
 def test_full_feature_vector_shape(spark):
     sents = _build(spark)
     pats = mining.mine_patterns(sents, min_sup=2)
-    full = classifier.featurize(pats, sentences=sents)
+    full = classifier.featurize(
+        pats, classifier.corpus_features(pats, sents))
     assert set(classifier.FEATURES) <= set(full.columns)
     # 23 base + 13 corpus-context features ≥ reference's 25-feature family
     assert len(classifier.FEATURES) >= 25

@@ -1,40 +1,52 @@
-"""S7 segmented-corpus sink: model.segment_sentences emits the full
-per-sentence span table (the reference's segmented-corpus output,
-segmentation.h writeSegmentedCorpus shape) and agrees with the compact
-_em_pass statistics kernel on what Viterbi chose."""
+"""S7/M7/M8 segmentation: the task-compacted EM kernel (`model._em_stats`)
+counts exactly what the one Viterbi segmenter, `algo.segment_sentence`
+(also run per sentence by `tuples.extraction_df`), chooses when it runs on
+the driver over the same sentences — chosen pattern ids and the subtree
+signatures of chosen multi-word spans."""
 
-from pyspark.sql import functions as F
+import math
+from collections import Counter
 
-from remine_spark import model as model_mod, pipeline, synth
-from remine_spark.corpus import sentences_from_pages
+from remine_spark import algo, model as model_mod, pipeline, synth
 
 
-def test_segment_sentences_spans_and_em_pass_agree(spark, tmp_path):
+def test_em_stats_match_driver_segmenter(spark, tmp_path):
     pages = synth.pages_df(spark, 100, seed=11, num_partitions=3)
     out = pipeline.run_pipeline(spark, pages, str(tmp_path / "wd"),
                                 inner_iters=2, transe_epochs=2, resume=False)
     m = pipeline.load_model(str(tmp_path / "wd"))
     sentences = out["sentences"]
-    bc = spark.sparkContext.broadcast(m.payload())
+    payload = m.payload()
+    bc = spark.sparkContext.broadcast(payload)
 
-    seg = model_mod.segment_sentences(sentences, bc).cache()
-    rows = seg.collect()
+    want_pat: Counter = Counter()
+    want_sig: Counter = Counter()
+    energies = []
+    rows = sentences.select("tokens", "dep_head").collect()
     assert rows
-    n_sent = sentences.count()
-    assert len(rows) == n_sent  # one row per sentence (full sink)
-    for r in rows[:50]:
-        spans = [(s.start, s.end) for s in r.segments]
-        # spans are ordered, non-overlapping, within the sentence
+    for r in rows:
+        toks = list(r.tokens)
+        deps = [(i, int(h)) for i, h in enumerate(r.dep_head)]
+        segs, energy = algo.segment_sentence(
+            toks, deps, payload["trie"], payload["patterns"],
+            payload["prob"], payload["deps_logprob"],
+            payload["default_logprob"])
+        spans = [(s, e) for (s, e, _pid, _ok) in segs]
+        # spans are ordered, non-overlapping and tile the sentence
         assert all(a < b for a, b in spans)
         assert all(spans[i][1] <= spans[i + 1][0]
                    for i in range(len(spans) - 1))
+        assert not toks or (spans[0][0] == 0 and spans[-1][1] == len(toks))
+        for (s, e, pid, _ok) in segs:
+            if pid >= 0:
+                want_pat[pid] += 1
+                if e - s > 1:
+                    want_sig[algo.tree_signature(deps, s, e)] += 1
+        energies.append(float(energy) if energy > -1e80 else 0.0)
 
-    # the compact EM kernel counts exactly the spans the full sink shows
-    chosen_full = (
-        seg.select(F.explode("segments").alias("s"))
-        .filter(F.col("s.pattern_id") >= 0)
-        .groupBy(F.col("s.pattern_id").alias("pid"))
-        .agg(F.count(F.lit(1)).alias("cnt")).collect())
-    want = {int(r.pid): int(r.cnt) for r in chosen_full}
-    _sig, got, _e = model_mod._em_stats(sentences, m, bc)
-    assert got == want
+    got_sig, got_pat, got_energy = model_mod._em_stats(sentences, m, bc)
+    bc.destroy()
+    assert want_sig, "no multi-word span chosen"
+    assert got_pat == dict(want_pat)
+    assert got_sig == dict(want_sig)
+    assert math.isclose(got_energy, math.fsum(energies), rel_tol=1e-9)

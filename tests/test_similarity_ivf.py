@@ -1,4 +1,4 @@
-"""IVF ANN (KMeans coarse quantizer): smoke + recall vs brute force."""
+"""IVF ANN (offline KMeans coarse quantizer): recall vs brute force."""
 
 from remine_spark.operators.similarity import ann_cosine_topk, ann_ivf_topk
 
@@ -17,14 +17,3 @@ def test_ivf_topk_recall(spark):
     top5 = {(q, c) for q, lst in brute.items() for _rk, c in lst}
     found_in_top5 = len(ivf & top5)
     assert found_in_top5 / len(ivf) >= 0.5, (found_in_top5, len(ivf))
-
-
-def test_ivf_trained_variant_smoke(spark):
-    """The in-session KMeans path stays alive (it is the offline trainer
-    behind the frozen centroid literals); its probe shape must yield
-    ranked in-cell neighbors like the registered literal-centroid query."""
-    from remine_spark.operators.similarity import ann_ivf_topk_trained
-
-    rows = ann_ivf_topk_trained(spark, SF).collect()
-    assert rows
-    assert all(1 <= r.rnk <= 3 and r.q_id != r.cand_id for r in rows)
