@@ -14,15 +14,32 @@ one scan task per core, so each Python stage that re-reads it runs as one
 wave of tasks and pays the per-task Python worker cost once per core, not
 once per file; an input with fewer files than cores keeps one task per
 file; cluster-scale files split at 128 MiB.
+
+On a local master (the ``master`` argument, or ``spark.master`` under
+spark-submit) Python workers run ``remine_spark.pydaemon``: the stock daemon,
+except that a task start no longer re-reads the directories of the zip
+archives on the worker's ``sys.path`` that have not changed (≈0.2 s per task
+on a 4-core box; a rebuilt ``--py-files`` zip is still re-read). The daemon
+imports that module at launch, before ``--py-files`` are added, so the
+workers' ``PYTHONPATH`` is set to the directory or zip this package was
+imported from; that also lets a script started from any directory run
+Python tasks. Neither is set for another master, where a driver-local path
+means nothing: a cluster installs the package on its executors and passes
+``{"spark.python.daemon.module": "remine_spark.pydaemon"}`` in
+``extra_conf``.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+# the directory (or zip) this package was imported from
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_driver_memory() -> str:
@@ -83,6 +100,18 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    effective_master = master
+    if effective_master is None:
+        # the submit command's master: SparkConf reads it only once the
+        # submit JVM's gateway is connected
+        SparkContext._ensure_initialized()
+        effective_master = SparkConf().get("spark.master", "")
+    if effective_master.startswith("local"):
+        builder = (
+            builder
+            .config("spark.python.daemon.module", "remine_spark.pydaemon")
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
