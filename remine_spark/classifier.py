@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import model as model_mod
+
 LABEL_BP, LABEL_EP, LABEL_RP = 0, 1, 2
 POOL_MIN_FREQ = 1  # utils.py:41 uses >9 on a 60k-doc corpus; scaled fixture
 
@@ -476,14 +478,15 @@ def fit_quality_forest(feats: DataFrame, ent_pool: set[str],
 
 def assign_quality_ml(feats: DataFrame, rf_model, assembler) -> DataFrame:
     """M5 (predict_quality.h:12-82): indicator = argmax class, quality =
-    probability of that class; unigram POS overrides verbatim
-    (predict_quality.h:143-155). Multi-word rows score through the
-    multi-word forest, unigram rows through the unigram forest (the
-    reference's two-classifier split); ``rf_model`` is the
-    ``{"multi": ..., "uni": ...}`` dict that :func:`fit_quality_forest`
-    returns. Scoring is JVM-side (pyspark.ml broadcast models), no python
-    in the loop. ``feats`` is the :func:`featurize` table the forests were
-    fit on; the output is its pattern columns + (indicator, quality)."""
+    probability of that class, under the rule table's unigram POS
+    overrides (model.unigram_overrides, predict_quality.h:143-155).
+    Multi-word rows score through the multi-word forest, unigram rows
+    through the unigram forest (the reference's two-classifier split);
+    ``rf_model`` is the ``{"multi": ..., "uni": ...}`` dict that
+    :func:`fit_quality_forest` returns. Scoring is JVM-side (pyspark.ml
+    broadcast models), no python in the loop. ``feats`` is the
+    :func:`featurize` table the forests were fit on; the output is its
+    pattern columns + (indicator, quality)."""
     from pyspark.ml.functions import vector_to_array
 
     feats = assembler.transform(feats)
@@ -496,17 +499,8 @@ def assign_quality_ml(feats: DataFrame, rf_model, assembler) -> DataFrame:
     ind = (F.when(pred == LABEL_EP, "EP")
            .when(pred == LABEL_RP, "RP").otherwise("BP"))
     quality = F.element_at(probs, pred + 1)
-    pk = F.col("pos_key")
-    multi = F.col("n") > 1
-    # unigram overrides, verbatim from predict_quality.h:143-155
-    ind = (F.when(~multi & pk.rlike("^VB"), "RP")
-           .when(~multi & pk.isin("IN", "TO", "RP"), "RP")
-           .when(~multi & pk.isin("PRP", "PRP$"), "EP")
-           .otherwise(ind))
-    quality = (F.when(~multi & (pk.rlike("^VB")
-                                | pk.isin("IN", "TO", "RP", "PRP", "PRP$")),
-                      F.lit(1.0)).otherwise(quality))
-    return (scored.withColumn("indicator", ind)
-            .withColumn("quality", quality)
+    iq = model_mod.unigram_overrides().otherwise(
+        model_mod.iq_struct(ind, quality))
+    return (model_mod.with_quality(scored, iq)
             .drop("features", "rawPrediction", "probability", "prediction",
                   "label", *FEATURES))

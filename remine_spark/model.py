@@ -37,7 +37,7 @@ from collections import Counter
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from . import algo
 
@@ -53,47 +53,65 @@ _N = "(NN|NNS|NNP|NNPS)"
 _V = "(VB|VBD|VBG|VBN|VBP|VBZ)"
 
 
+def iq_struct(ind, q) -> Column:
+    """An (indicator, quality) struct from two literals or columns."""
+    return F.struct(F.lit(ind).alias("indicator"), F.lit(q).alias("quality"))
+
+
+def unigram_overrides() -> Column:
+    """The unigram POS overrides, verbatim from predict_quality.h:143-155,
+    as an open CASE over (pos_key, n) yielding an (indicator, quality)
+    struct: VB*→RP q=1, IN/TO/RP→RP q=1, PRP/PRP$→EP q=1. Both quality
+    sources (the rule table below, the forest in
+    classifier.assign_quality_ml) chain their own cases onto it."""
+    pk = F.col("pos_key")
+    uni = ~(F.col("n") > 1)
+    return (F.when(uni & pk.rlike(f"^{_V}$"), iq_struct("RP", 1.0))
+            .when(uni & pk.isin("IN", "TO", "RP"), iq_struct("RP", 1.0))
+            .when(uni & pk.isin("PRP", "PRP$"), iq_struct("EP", 1.0)))
+
+
+def with_quality(patterns: DataFrame, iq: Column) -> DataFrame:
+    """``patterns`` + (indicator, quality) taken from the struct ``iq``."""
+    return patterns.withColumn("_iq", iq).select(
+        "*", F.col("_iq.indicator").alias("indicator"),
+        F.col("_iq.quality").alias("quality"),
+    ).drop("_iq")
+
+
 def assign_quality(patterns: DataFrame) -> DataFrame:
     """patterns(+pos_key) → + (indicator, quality).
 
-    Unigram POS overrides are verbatim from predict_quality.h:143-155
-    (PRP→EP q=1, VB*→RP q=1, IN/TO/RP→RP q=1); multi-word shapes replace the
-    RF with distant-supervision-style rules (see module docstring).
+    The unigram overrides come first (:func:`unigram_overrides`); multi-word
+    shapes replace the RF with distant-supervision-style rules (see module
+    docstring).
     """
     pk = F.col("pos_key")
     multi = F.col("n") > 1
 
-    def iq(ind: str, q: float):
-        return F.struct(F.lit(ind).alias("indicator"),
-                        F.lit(q).alias("quality"))
-
     rules = (
-        # ---- unigram overrides (predict_quality.h:143-155) ----
-        F.when(~multi & pk.rlike(f"^{_V}$"), iq("RP", 1.0))
-        .when(~multi & pk.isin("IN", "TO", "RP"), iq("RP", 1.0))
-        .when(~multi & pk.isin("PRP", "PRP$"), iq("EP", 1.0))
-        .when(~multi & pk.isin("NNP", "NNPS"), iq("EP", 0.6))
-        .when(~multi & pk.isin("NN", "NNS"), iq("EP", 0.55))
+        unigram_overrides()
+        .when(~multi & pk.isin("NNP", "NNPS"), iq_struct("EP", 0.6))
+        .when(~multi & pk.isin("NN", "NNS"), iq_struct("EP", 0.55))
         # ---- multi-word shape rules (replace the RF) ----
-        .when(multi & pk.rlike("^NNPS?( NNPS?)+$"), iq("EP", 0.95))
-        .when(multi & pk.rlike("^(NN|NNS)( (NN|NNS))+$"), iq("EP", 0.8))
+        .when(multi & pk.rlike("^NNPS?( NNPS?)+$"), iq_struct("EP", 0.95))
+        .when(multi & pk.rlike("^(NN|NNS)( (NN|NNS))+$"), iq_struct("EP", 0.8))
         # N-of-N is an entity shape ("bank of america"); other N-IN-N
         # ("globex in springfield") is junk — a mid-band quality (0.5..0.65)
         # would win Viterbi yet fail the emission gate and swallow its
         # tokens, so junk goes straight to ~0 and parts win.
         .when(multi & pk.rlike(f"^{_N}( {_N})* IN {_N}( {_N})*$")
-              & F.array_contains("ngram", "of"), iq("EP", 0.75))
-        .when(multi & pk.rlike(f"^{_N}( {_N})* IN {_N}( {_N})*$"), iq("BP", 0.001))
+              & F.array_contains("ngram", "of"), iq_struct("EP", 0.75))
+        .when(multi & pk.rlike(f"^{_N}( {_N})* IN {_N}( {_N})*$"),
+              iq_struct("BP", 0.001))
         # relation regex V+W*P | V+P | V (utils.py:52-57)
-        .when(multi & pk.rlike(f"^{_V}( {_V})*( (IN|TO|RP))?$"), iq("RP", 0.9))
+        .when(multi & pk.rlike(f"^{_V}( {_V})*( (IN|TO|RP))?$"),
+              iq_struct("RP", 0.9))
         # verb-crossing junk → effectively never a phrase
-        .when(multi & pk.rlike("VB"), iq("BP", 0.001))
-        .otherwise(iq("BP", 0.3))
+        .when(multi & pk.rlike("VB"), iq_struct("BP", 0.001))
+        .otherwise(iq_struct("BP", 0.3))
     )
-    return patterns.withColumn("_iq", rules).select(
-        "*", F.col("_iq.indicator").alias("indicator"),
-        F.col("_iq.quality").alias("quality"),
-    ).drop("_iq")
+    return with_quality(patterns, rules)
 
 
 # --------------------------------------------------------------------------

@@ -16,44 +16,47 @@ from remine_spark.catalog import query, table
 _STOPS = "('the','a','of','in','and','is','to')"
 
 
-def _ordinal_ranked(df, key: str, n_parts: int = 8):
-    """The lazy pre-materialization fragment of :func:`_ordinal` — split
-    out so plan tests can assert its shape (range partition + per-pid
-    local rank, never a single-partition global sort)."""
+def _local_prefix_sums(df, key: str, val: str, n_parts: int = 8):
+    """The lazy pre-materialization fragment of :func:`_prefix_sum` —
+    split out so plan tests can assert its shape (range partition + per-pid
+    local running sum, never a single-partition global sort)."""
     d = (df.repartitionByRange(n_parts, F.col(key))
          .withColumn("_pid", F.spark_partition_id()))
-    w = Window.partitionBy("_pid").orderBy(key)
-    return d.withColumn("_local_rn", F.row_number().over(w))
+    w = (Window.partitionBy("_pid").orderBy(key)
+         .rowsBetween(Window.unboundedPreceding, -1))
+    return d.withColumn(
+        "_local_off", F.coalesce(F.sum(val).over(w), F.lit(0)).cast("long"))
 
 
-def _ordinal(df, key: str, n_parts: int = 8):
-    """Global 1-based ordinal by `key` WITHOUT a single-partition sort —
-    the zipWithIndex pattern in pure DataFrame ops: range-partition on the
-    key (partitions are globally ordered), rank locally per partition
-    (Window.partitionBy(pid) — parallel, no global exchange), then add the
-    per-partition cumulative offsets (one tiny bounded-by-#partitions
-    aggregate, broadcast back). Scales to any row count."""
-    # materialize BEFORE the counts action: RangePartitioner samples
+def _prefix_sum(df, key: str, val: str, out: str, n_parts: int = 8):
+    """Global EXCLUSIVE prefix sum of ``val`` in ``key`` order without a
+    single-partition window — the zipWithIndex pattern in pure DataFrame
+    ops (s1_zip_scan's ordinal is this sum over a constant 1):
+    range-partition on the key (partitions globally ordered), running-sum
+    locally per partition (parallel window), then add per-partition
+    totals (one bounded-by-#partitions collect, broadcast back). Scales to
+    any row count."""
+    # materialize BEFORE the totals action: RangePartitioner samples
     # boundaries per execution (seeded by rdd id), so an unmaterialized
-    # plan could place rows differently in the counts job vs the final
+    # plan could place rows differently in the totals job vs the final
     # join job, misaligning the offsets. localCheckpoint (not persist)
     # pins one partitioning for both AND releases its blocks when the
     # DataFrame is garbage-collected — a plain DataFrame persist lives in
     # the CacheManager until an explicit unpersist that no caller of a
     # lazily-returned result can safely issue.
-    d = _ordinal_ranked(df, key, n_parts).localCheckpoint()
-    counts = sorted((r["_pid"], r["cnt"]) for r in
-                    d.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt"))
-                    .collect())
+    d = _local_prefix_sums(df, key, val, n_parts).localCheckpoint()
+    totals = sorted(
+        (r["_pid"], r["s"]) for r in
+        d.groupBy("_pid").agg(F.sum(val).alias("s")).collect())
     offset, offsets = 0, {}
-    for pid, cnt in counts:
+    for pid, s in totals:
         offsets[pid] = offset
-        offset += cnt
+        offset += int(s or 0)
     off_df = d.sparkSession.createDataFrame(
-        [(p, o) for p, o in offsets.items()], "_pid int, _off long")
+        [(p, o) for p, o in offsets.items()], "_pid int, _poff long")
     return (d.join(F.broadcast(off_df), "_pid")
-            .withColumn("rn", (F.col("_local_rn") + F.col("_off")))
-            .drop("_pid", "_local_rn", "_off"))
+            .withColumn(out, F.col("_local_off") + F.col("_poff"))
+            .drop("_pid", "_local_off", "_poff"))
 
 
 @query("s1_zip_scan", """
@@ -67,13 +70,16 @@ def _ordinal(df, key: str, n_parts: int = 8):
 def s1_zip_scan(spark, sf_dir):
     """S1 (preprocessing.py:81-116; documents.h:149-316): the reference zips
     three parallel positional files line-by-line. Relational form: ordinal
-    zip-join of two sorted scans. The ordinal comes from the per-partition
-    zipWithIndex pattern (_ordinal) — range partition + local rank + offset
-    add — never a global-order window's single-partition sort."""
+    zip-join of two sorted scans. The ordinal is the distributed prefix sum
+    (_prefix_sum) of a constant 1 — range partition + local running sum +
+    offset add — never a global-order window's single-partition sort."""
     d = table(spark, sf_dir, "documents")
     e = table(spark, sf_dir, "embeddings")
-    dd = _ordinal(d.select("doc_id", "n_chars"), "doc_id")
-    ee = _ordinal(e.select("vec_id", "label"), "vec_id")
+    # the 0-based ordinal is the exclusive prefix sum of a constant 1
+    dd = _prefix_sum(d.select("doc_id", "n_chars", F.lit(1).alias("_one")),
+                     "doc_id", "_one", "rn")
+    ee = _prefix_sum(e.select("vec_id", "label", F.lit(1).alias("_one")),
+                     "vec_id", "_one", "rn")
     return dd.join(ee, "rn").select("doc_id", "vec_id", "n_chars", "label")
 
 

@@ -20,9 +20,10 @@ sample_stratified is a scan-side filter (pure map work at any scale).
 
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+from pyspark.sql import functions as F
 
 from remine_spark.catalog import h32_duck, h32_spark, query, table
+from remine_spark.operators.relational import _prefix_sum
 
 # One "word" per letter-run, digit-run, or single non-alnum char — the same
 # pre-tokenization regex family BPE tokenizers (GPT-2 style) apply before
@@ -165,36 +166,6 @@ def lm_perplexity(spark, sf_dir):
 
 
 PACK_BUDGET = 4096  # tokens per training shard (context-length planning unit)
-
-
-def _prefix_sum(df, key: str, val: str, out: str, n_parts: int = 8):
-    """Global EXCLUSIVE prefix sum of ``val`` in ``key`` order without a
-    single-partition window — the same three-step zipWithIndex pattern as
-    relational._ordinal, generalized from rank to sum: range-partition on
-    the key (partitions globally ordered), running-sum locally per
-    partition (parallel window), then add per-partition totals (one
-    bounded-by-#partitions collect, broadcast back). localCheckpoint pins
-    one RangePartitioner placement for both the totals job and the final
-    join (boundaries are sampled per execution otherwise)."""
-    d = (df.repartitionByRange(n_parts, F.col(key))
-         .withColumn("_pid", F.spark_partition_id()))
-    w = (Window.partitionBy("_pid").orderBy(key)
-         .rowsBetween(Window.unboundedPreceding, -1))
-    d = d.withColumn(
-        "_local_off", F.coalesce(F.sum(val).over(w), F.lit(0)).cast("long")
-    ).localCheckpoint()
-    totals = sorted(
-        (r["_pid"], r["s"]) for r in
-        d.groupBy("_pid").agg(F.sum(val).alias("s")).collect())
-    offset, offsets = 0, {}
-    for pid, s in totals:
-        offsets[pid] = offset
-        offset += int(s or 0)
-    off_df = d.sparkSession.createDataFrame(
-        [(p, o) for p, o in offsets.items()], "_pid int, _poff long")
-    return (d.join(F.broadcast(off_df), "_pid")
-            .withColumn(out, F.col("_local_off") + F.col("_poff"))
-            .drop("_pid", "_local_off", "_poff"))
 
 
 @query("pack_token_budget", f"""

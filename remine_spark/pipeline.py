@@ -1,14 +1,16 @@
 """End-to-end pipeline with checkpointed, resumable stage boundaries.
 
 north_rule requirements implemented here:
-- every stage boundary is a parquet checkpoint (parquet-tested; the
-  ``TABLE_FORMAT`` seam for other table formats is untested);
+- every stage boundary is a parquet checkpoint (written and re-read as
+  parquet; no other table format is supported);
 - resume: ``run_pipeline`` skips any stage whose checkpoint already exists
   (kill it after stage k, relaunch, it picks up at k+1 — tested);
 - per-partition lineage + metrics rows are appended to ``<workdir>/lineage``
   for every materialized stage;
 - the triples sink is salted by subj-hash (``pmod(xxhash64(subj), n)``) to
-  defuse head-entity skew before the final shuffle/write.
+  defuse head-entity skew before the final shuffle/write; the edges sink is
+  a projection of the triples re-read, in the same buckets, with no second
+  shuffle.
 
 Stage graph (SURVEY §3.4):
 pages → sentences → patterns → [census + EM fit] → mentions
@@ -31,8 +33,11 @@ from .corpus import sentences_from_pages
 # semantics change: resume=True then refuses the older workdir instead of
 # re-reading its checkpoints with NULL-filled columns. (6: chunk columns
 # on sentences, is_boost on patterns, entity_id on entities, one fused
-# kind-partitioned extraction checkpoint.)
-CHECKPOINT_LAYOUT = 6
+# kind-partitioned extraction checkpoint. 7: mention rows of the
+# extraction checkpoint carry their entity key, the entity map groups by
+# it, and edges are a projection of the triples, bucketed as the
+# triples.)
+CHECKPOINT_LAYOUT = 7
 
 
 def _n_buckets(spark: SparkSession) -> int:
@@ -44,6 +49,18 @@ def _n_buckets(spark: SparkSession) -> int:
     bounded to [8, 4096] gives single-digit file counts on a laptop and ~4k
     on a 1000-executor cluster."""
     return min(4096, max(8, spark.sparkContext.defaultParallelism // 2))
+
+
+def salted_triples(ranked: DataFrame) -> DataFrame:
+    """The triples projection of a ranked tuple frame, salted for every
+    triples sink (the batch checkpoint and the stream's epoch table):
+    ``bucket = pmod(xxhash64(subj), n)``, one shuffle into ``n`` partitions
+    on it, so a bucket-partitioned write gives one file per bucket."""
+    n = _n_buckets(ranked.sparkSession)
+    return ranked.select(
+        "url", "doc_id", "sent_id", "subj", "pred", "obj", "score", "rank",
+        F.pmod(F.xxhash64("subj"), F.lit(n)).alias("bucket"),
+    ).repartition(n, F.col("bucket"))
 
 
 def _exists(path: str) -> bool:
@@ -72,10 +89,10 @@ def _lineage(spark: SparkSession, workdir: str, stage: str, path: str,
             rows.append((pid, int(pq.ParquetFile(f).metadata.num_rows), stage,
                          float(wall_s), now, os.path.relpath(f, path)))
     else:
-        reader = spark.read.format(TABLE_FORMAT)
+        reader = spark.read
         if schema is not None:
             reader = reader.schema(schema)  # empty checkpoint: no footers
-        counts = (reader.load(path)
+        counts = (reader.parquet(path)
                   .groupBy(F.input_file_name().alias("f"))
                   .agg(F.count(F.lit(1)).alias("n")).collect())
         for pid, r in enumerate(sorted(counts, key=lambda r: r["f"])):
@@ -113,16 +130,10 @@ def _read_wide(spark: SparkSession, path: str, schema=None) -> DataFrame:
 
     ``schema`` makes empty checkpoints readable (a degenerate stage writes
     only _SUCCESS; schema inference would fail)."""
-    reader = spark.read.format(TABLE_FORMAT)
+    reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    return reader.load(path)
-
-
-# Stage-table format: parquet-tested; format seam untested.
-# SPARK_GRAFT_TABLE_FORMAT names the format every checkpoint is written and
-# re-read with; no format other than parquet has been run.
-TABLE_FORMAT = os.environ.get("SPARK_GRAFT_TABLE_FORMAT", "parquet")
+    return reader.parquet(path)
 
 
 def checkpoint(spark: SparkSession, workdir: str, stage: str, df: DataFrame,
@@ -134,10 +145,10 @@ def checkpoint(spark: SparkSession, workdir: str, stage: str, df: DataFrame,
     path = os.path.join(workdir, stage)
     if not (resume and _exists(path)):
         t0 = time.time()
-        writer = df.write.mode("overwrite").format(TABLE_FORMAT)
+        writer = df.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
-        writer.save(path)
+        writer.parquet(path)
         _lineage(spark, workdir, stage, path, time.time() - t0,
                  schema=df.schema)
     return _read_wide(spark, path, schema=df.schema)
@@ -237,7 +248,6 @@ def run_pipeline(
     only the (indicator, quality) contract either way."""
     fsio.makedirs(workdir)
     _guard_resume_input(pages, workdir, resume)
-    n_buckets = _n_buckets(spark)
     timings: dict[str, float] = {}
     _t0 = [time.time()]
 
@@ -322,7 +332,7 @@ def run_pipeline(
 
     bc = spark.sparkContext.broadcast(m.payload())
 
-    # 4. mentions (entity map input) + tuples (M10/M11) — one fused
+    # 4. mentions (entity map input, keyed) + tuples (M10/M11) — one fused
     # extraction pass (a single Viterbi segmentation per sentence feeds
     # both tables), checkpointed as a kind-partitioned union so each
     # table's re-read prunes to its own files
@@ -344,53 +354,39 @@ def run_pipeline(
         spark, workdir, "kg_embeddings", transe.embeddings_df(spark, te),
         resume)
     _mark("transe")
-    ranked = transe.score_and_rank(spark, tuples, te)
-    triples = ranked.select(
-        "url", "doc_id", "sent_id", "subj", "pred", "obj", "score", "rank",
-        F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).alias("bucket"),
-    ).repartition(n_buckets, F.col("bucket"))  # one file per bucket
-    triples = checkpoint(spark, workdir, "triples", triples, resume,
-                         partition_cols=["bucket"])
+    triples = checkpoint(
+        spark, workdir, "triples",
+        salted_triples(transe.score_and_rank(spark, tuples, te)), resume,
+        partition_cols=["bucket"])
     _mark("rank_triples")
 
-    # entity canonicalization map: mention surface → canonical form, with a
-    # stable shuffle-free entity_id (xxhash64 of the canonical form —
-    # computable on any executor; a 64-bit space makes collisions
-    # negligible at 10^9 entities, and an id table join stays available if
-    # exact density is ever required)
+    # entity canonicalization map: entity key → frequency + a surface, with
+    # a stable shuffle-free entity_id (xxhash64 of the key — computable on
+    # any executor; a 64-bit space makes collisions negligible at 10^9
+    # entities). The key was made by the extraction kernel
+    # (tuples.entity_key), the same call that made the triples' endpoints.
     entities = checkpoint(
         spark, workdir, "entities",
-        mentions.select(
-            F.lower(F.regexp_replace("text", " ", "_")).alias("entity"),
-            "text", "url", "doc_id", "sent_id", "start", "end",
-        ).groupBy("entity").agg(
+        extraction.filter(F.col("kind") == "m").groupBy("entity").agg(
             F.count(F.lit(1)).alias("freq"),
             F.min("text").alias("surface"),
         ).withColumn("entity_id", F.xxhash64("entity")),
         resume)
 
-    # entity linking + graph edges (north_star: "triples,
-    # entity-canonicalization maps, and graph edges"): triples' endpoint
-    # surfaces resolve to canonical entity ids via broadcast joins (the
-    # entity map is the small side; at extreme entity cardinality switch to
-    # a bucketed sort-merge join on `entity`), salted on subj_id
-    ent_ids = entities.select("entity", "entity_id")
-    subj_ids = ent_ids.select(F.col("entity").alias("subj"),
-                              F.col("entity_id").alias("subj_id"))
-    obj_ids = ent_ids.select(F.col("entity").alias("obj"),
-                             F.col("entity_id").alias("obj_id"))
-    edges = (
-        triples.join(F.broadcast(subj_ids), "subj", "left")
-        .join(F.broadcast(obj_ids), "obj", "left")
-        .select(
-            "subj_id", "obj_id", "subj", "pred", "obj", "score", "rank",
-            "doc_id", "sent_id", "url",
-            F.pmod(F.coalesce("subj_id", F.lit(0)),
-                   F.lit(n_buckets)).alias("bucket"))
-        .repartition(n_buckets, F.col("bucket"))
-    )
-    edges = checkpoint(spark, workdir, "edges", edges, resume,
-                       partition_cols=["bucket"])
+    # graph edges (north_star: "triples, entity-canonicalization maps, and
+    # graph edges"): every triple endpoint is the key of a mention of the
+    # same kernel call, so its id is xxhash64 of the endpoint itself and
+    # equals its entity's entity_id — the edges are a projection of the
+    # triples re-read. Each triples file sits in one bucket directory, so
+    # every task writes only the buckets it read: no join, no shuffle.
+    edges = checkpoint(
+        spark, workdir, "edges",
+        triples.select(
+            F.xxhash64("subj").alias("subj_id"),
+            F.xxhash64("obj").alias("obj_id"),
+            "subj", "pred", "obj", "score", "rank", "doc_id", "sent_id",
+            "url", "bucket"),
+        resume, partition_cols=["bucket"])
     _mark("entities_edges")
 
     return {

@@ -6,8 +6,10 @@ pipeline trains the segmentation model (EM needs global corpus statistics,
 so it stays batch); the stream then applies the FROZEN model to newly
 arriving pages via ``foreachBatch``, running the batch pipeline's own
 corpus stage and extraction kernel (``tuples.extraction_df``, tuple rows
-kept) on each micro-batch and appending to the triples table — so a
-streamed page yields exactly the tuples a batch run over it would.
+kept) on each micro-batch and appending to the triples table, salted by
+the batch sink's own rule (``pipeline.salted_triples``) — so a streamed
+page yields exactly the tuples a batch run over it would, in the same
+bucket.
 
 Exactly-once: the file source tracks processed files in the streaming
 checkpoint; the sink is partitioned by epoch_id and each micro-batch
@@ -66,14 +68,8 @@ def run_incremental_kg(
         else:
             ranked = (tuples.withColumn("score", F.lit(None).cast("double"))
                       .withColumn("rank", F.lit(None).cast("int")))
-        out = ranked.select(
-            "url", "doc_id", "sent_id", "subj", "pred", "obj",
-            "score", "rank",
-            F.pmod(F.xxhash64("subj"), F.lit(pipeline._n_buckets(spark)))
-            .alias("bucket"),
-            F.lit(epoch_id).alias("epoch_id"),
-        ).repartition(F.col("bucket"))
-        write_epoch(out, out_dir)
+        write_epoch(pipeline.salted_triples(ranked)
+                    .withColumn("epoch_id", F.lit(epoch_id)), out_dir)
 
     pages = stream_pages(spark, input_dir,
                          max_files_per_trigger=max_files_per_trigger)

@@ -12,8 +12,8 @@ the reference's remine-ie.sh stages 3-6 (segment → extract → transformat
 Final-triple formatting mirrors postprocessing.py:
 - pred = '_'.join(path tokens) with '_and' removed (generate_output,
   postprocessing.py:71-75)
-- args lowercased, "''" stripped, spaces → '_' (loadRMTest,
-  postprocessing.py:326-327)
+- args are ``entity_key``s: lowercased, "''" stripped, spaces → '_'
+  (loadRMTest, postprocessing.py:326-327)
 - gates: path not a lone punct token (postprocessing.py:259), sentence POS
   contains VB or IN (postprocessing.py:324), ≥1 RP segment on the path
   (postprocessing.py:332), both args non-empty (postprocessing.py:328).
@@ -28,6 +28,15 @@ from pyspark.sql import DataFrame, functions as F
 
 from . import algo
 from .nlp import PUNC
+
+
+def entity_key(surface: str) -> str:
+    """The one rule that turns a mention surface into an entity key:
+    lowercased, "''" stripped, spaces → '_' (loadRMTest,
+    postprocessing.py:326-327). Triple endpoints and the entity map's
+    ``entity`` are both this key, so an edge endpoint needs no lookup."""
+    return surface.lower().replace("''", "").replace(" ", "_")
+
 
 def extract_tuples_py(toks, pos, heads, types, m) -> tuple[list, list]:
     """Single-sentence end-to-end extraction given a model payload ``m``.
@@ -68,8 +77,7 @@ def extract_tuples_py(toks, pos, heads, types, m) -> tuple[list, list]:
                     rels.append(item)  # loadRMTest postprocessing.py:314-321
         if not rels:
             continue
-        subj = ments[mi][2].lower().replace("''", "").replace(" ", "_")
-        obj = ments[j][2].lower().replace("''", "").replace(" ", "_")
+        subj, obj = entity_key(ments[mi][2]), entity_key(ments[j][2])
         if not subj or not obj:
             continue
         pred = "_".join(rm_tokens).replace("_and", "")
@@ -79,7 +87,7 @@ def extract_tuples_py(toks, pos, heads, types, m) -> tuple[list, list]:
 
 EXTRACTION_SCHEMA = (
     "url string, doc_id long, sent_id int, kind string, "
-    "start int, end int, text string, "
+    "start int, end int, text string, entity string, "
     "subj string, pred string, obj string, rels array<string>, "
     "subj_start int, subj_end int, obj_start int, obj_end int"
 )
@@ -91,7 +99,10 @@ _EXTRACTION_COLS = [f.strip().split(" ")[0]
 def extraction_df(sentences: DataFrame, bc_model) -> DataFrame:
     """The extraction kernel: ONE Viterbi segmentation per sentence feeds
     both the mention and the tuple table, emitted as a tagged union
-    (kind 'm' = mention row, kind 't' = tuple row). The pipeline
+    (kind 'm' = mention row, kind 't' = tuple row). A mention row carries
+    its ``entity_key``, the key every tuple endpoint of the same call
+    already is, so the entity map and the edges need no key of their
+    own. The pipeline
     checkpoints this union partitioned by ``kind`` so each downstream
     table re-reads only its own files (partition pruning); the stream
     filters to kind 't' in the same plan."""
@@ -108,10 +119,10 @@ def extraction_df(sentences: DataFrame, bc_model) -> DataFrame:
                     list(toks), list(pos), list(heads), list(types), m)
                 for (s, e, text) in ments:
                     rows.append((url, did, sid, "m", int(s), int(e), text,
-                                 None, None, None, None,
+                                 entity_key(text), None, None, None, None,
                                  None, None, None, None))
                 for (subj, pred, obj, rels, sspan, ospan) in tups:
-                    rows.append((url, did, sid, "t", None, None, None,
+                    rows.append((url, did, sid, "t", None, None, None, None,
                                  subj, pred, obj, rels,
                                  int(sspan[0]), int(sspan[1]),
                                  int(ospan[0]), int(ospan[1])))

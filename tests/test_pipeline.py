@@ -116,22 +116,48 @@ def test_checkpoint_reread_packs_to_core_count(spark, tmp_path):
 
 
 def test_edges_linked_to_entities(run, spark):
-    """Graph edges: triples' endpoints resolved to canonical entity_ids via
-    the entity map; link rate must be high (subjects ARE mentions).
-    Re-reads from disk: earlier tests may have overwritten checkpoints,
-    invalidating the fixture DataFrames' cached file listings."""
+    """Graph edges: every triple endpoint is the entity key of a mention
+    of the same extraction call, so every edge's subj_id and obj_id equal
+    their entities' entity_id (link rate 1.0). Re-reads from disk: earlier
+    tests may have overwritten checkpoints, invalidating the fixture
+    DataFrames' cached file listings."""
     wd, _out, _docs = run
-    edges = spark.read.parquet(os.path.join(wd, "edges"))
+    edges = spark.read.parquet(os.path.join(wd, "edges")).collect()
     triples = spark.read.parquet(os.path.join(wd, "triples"))
     entities = spark.read.parquet(os.path.join(wd, "entities"))
-    n = edges.count()
-    assert n == triples.count()
-    linked = edges.filter("subj_id IS NOT NULL AND obj_id IS NOT NULL").count()
-    assert linked / n >= 0.8, f"link rate {linked / n}"
+    assert edges and len(edges) == triples.count()
     ents = {r.entity: r.entity_id for r in entities.collect()}
-    sample = edges.filter("subj_id IS NOT NULL").limit(5).collect()
-    for r in sample:
-        assert ents.get(r.subj) == r.subj_id
+    unlinked = [r for r in edges
+                if r.subj_id is None or ents.get(r.subj) != r.subj_id
+                or r.obj_id is None or ents.get(r.obj) != r.obj_id]
+    assert not unlinked, f"link rate {1 - len(unlinked) / len(edges)}"
+
+
+def test_edges_are_a_projection_of_triples(run, spark, monkeypatch):
+    """The edges write is a projection of the triples re-read: its plan
+    has no exchange and no join, and its buckets are the triples'.
+    Resumes the fixture's workdir with only the edges checkpoint gone."""
+    import re
+
+    wd, _out, _docs = run
+    shutil.rmtree(os.path.join(wd, "edges"), ignore_errors=True)
+    written = {}
+    checkpoint = pipeline.checkpoint
+
+    def record(spark_, workdir, stage, df, *args, **kwargs):
+        written[stage] = df
+        return checkpoint(spark_, workdir, stage, df, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "checkpoint", record)
+    pages = synth.pages_df(spark, N_DOCS, seed=42, num_partitions=5)
+    out = pipeline.run_pipeline(
+        spark, pages, wd, inner_iters=2, transe_epochs=3, resume=True)
+    plan = written["edges"]._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"exchange|join", plan, flags=re.IGNORECASE), plan
+    cols = ["url", "sent_id", "subj", "pred", "obj", "bucket"]
+    got = sorted(tuple(r) for r in out["edges"].select(*cols).collect())
+    want = sorted(tuple(r) for r in out["triples"].select(*cols).collect())
+    assert got == want
 
 
 def test_salting_bounds_zipf_skew(run, spark):

@@ -64,13 +64,17 @@ def test_a5_band_join_is_equi_join(spark):
 def test_s1_zip_has_no_single_partition_sort(spark):
     plan = plan_of(relational.s1_zip_scan(spark, SF_DIR))
     assert n_nodes(plan, "single_partition_exchange") == 0
-    # the ordinal's partition/rank fragment materializes via
+    # the ordinal's partition/running-sum fragment materializes via
     # localCheckpoint, so the final plan only shows the checkpointed scan;
-    # assert the range-partition shape on the lazy fragment itself
+    # assert the range-partition shape on the lazy fragment itself (the
+    # one prefix-sum helper, shared with pack_token_budget)
+    from pyspark.sql import functions as F
+
     from remine_spark.catalog import table
 
-    frag = plan_of(relational._ordinal_ranked(
-        table(spark, SF_DIR, "documents").select("doc_id"), "doc_id"))
+    frag = plan_of(relational._local_prefix_sums(
+        table(spark, SF_DIR, "documents").select(
+            "doc_id", F.lit(1).alias("_one")), "doc_id", "_one"))
     assert n_nodes(frag, "range_partitioning") >= 1
     assert n_nodes(frag, "single_partition_exchange") == 0
 

@@ -81,6 +81,12 @@ def test_incremental_kg_update(spark, tmpdirs, tmp_path):
                   if r.url in urls)
     assert streamed, "the slice streamed no tuples"
     assert streamed == want
+    # the stream salts with the batch sink's rule: same bucket per subject
+    from pyspark.sql import functions as F
+
+    want_bucket = F.pmod(F.xxhash64("subj"),
+                         F.lit(pipeline._n_buckets(spark)))
+    assert got.filter(F.col("bucket") != want_bucket).count() == 0
 
     # 3. relaunch with no new files → nothing appended
     kg_update.run_incremental_kg(
